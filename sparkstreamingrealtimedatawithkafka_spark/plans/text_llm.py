@@ -43,6 +43,7 @@ from sparkstreamingrealtimedatawithkafka_spark.operators.skew import (
 )
 from sparkstreamingrealtimedatawithkafka_spark.plans._util import t
 from sparkstreamingrealtimedatawithkafka_spark.plans.registry import register
+from sparkstreamingrealtimedatawithkafka_spark.streaming.pipeline import entity_counts
 
 _TERMS_SQL = ", ".join(f"'{w}'" for w in TX.ENTITY_TERMS)
 _STOP_SQL = ", ".join(f"'{w}'" for w in TX.STOPWORDS)
@@ -100,14 +101,11 @@ def pipeline_parity_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale): the Python plane is per-partition workers, so a single-split
     scan serializes the whole extraction through ONE worker; spreading
     fans the Arrow batches across the cluster's workers. Result is a
-    pure integer count — partitioning cannot move it."""
+    pure integer count — partitioning cannot move it. The counting is the
+    streaming pipeline's own ``entity_counts``, so the UDF runs once per
+    document here too."""
     docs = spread_narrow_scan(t(spark, sf_dir, "documents"), "doc_id")
-    return (
-        docs.withColumn("entities", TX.extract_entities_udf(F.col("text")))
-        .select(F.explode("entities").alias("entity"))
-        .groupBy("entity")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    return entity_counts(docs, use_udf=True)
 
 
 @register(

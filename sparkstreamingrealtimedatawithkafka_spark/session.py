@@ -10,13 +10,30 @@ timezone (oracle comparability), Arrow-based pandas conversion.
 Local mode is one JVM with N threads; on a real cluster the same confs hold
 and the parallelism knobs (``spark.sql.shuffle.partitions``) should be set
 to ~2-3x total executor cores.
+
+Checkpoint file manager: when unqualified paths land on the local file
+system (``fs.defaultFS`` is ``file:``), streaming checkpoints go through
+Spark's FileSystem-API manager instead of the default FileContext one.
+Without the native Hadoop library (pip PySpark ships none) FileContext
+forks a ``readlink`` process for every status call on a ``file:`` path, so
+each offset, commit, source-log and state-delta file costs several process
+spawns per trigger. Local ``rename(2)`` is atomic, so the FileSystem
+manager keeps every guarantee the checkpoint needs there; an HDFS default
+FS keeps FileContext and its atomic rename-with-overwrite.
 """
 
 from __future__ import annotations
 
 import os
+from urllib.parse import urlparse
 
 from pyspark.sql import SparkSession
+
+CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 def build_session(
@@ -58,4 +75,10 @@ def build_session(
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    default_fs = spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS")
+    if urlparse(default_fs).scheme == "file" and (
+        spark.conf.get(CHECKPOINT_MANAGER_CONF, None) is None
+    ):
+        # A runtime SQL conf: every query started afterwards picks it up.
+        spark.conf.set(CHECKPOINT_MANAGER_CONF, FS_CHECKPOINT_MANAGER)
     return spark

@@ -27,6 +27,8 @@ driver-side. The schema inspection reads only the parquet footer.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -262,29 +264,44 @@ def event_time_columns(ts_type) -> tuple:
 
 # Resolved-schema memo. ``spark.read.parquet`` without an explicit schema
 # runs a footer-inference JOB per call — 93 of the 540 jobs in a full bench
-# pass were these (tools/profile_r15). Fixture files are immutable within a
-# process, so after the first load resolves (and contract-checks) a table's
-# schema, later loads pass it explicitly and skip the job. This memoizes
-# METADATA only — every query still reads row data from the parquet files;
-# no results or intermediates are cached. Keyed by (sf_dir, name); a schema
-# object is session-independent, so the memo survives session restarts in
-# tests without going stale (paths are never rewritten with a new schema
-# in-process — drift tests use fresh tmp dirs).
+# pass were these (tools/profile_r15). After the first load resolves (and
+# contract-checks) a table's schema, later loads pass it explicitly and skip
+# the job. This memoizes METADATA only — every query still reads row data
+# from the parquet files; no results or intermediates are cached. Keyed by
+# (sf_dir, name); each entry carries the file's (mtime_ns, size) stamp from
+# when it was read, and a load whose stamp differs re-infers, so a file
+# rewritten at the same path is checked against its own schema, never the
+# cached one. A schema object is session-independent, so the memo survives
+# session restarts. Paths that ``os.stat`` cannot see (remote file systems)
+# are never memoized.
 _SCHEMA_CACHE: dict = {}
 
 
+def _file_stamp(path: str) -> tuple[int, int] | None:
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return st.st_mtime_ns, st.st_size
+
+
 def _read_fixture(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one fixture file through the schema memo, contract-checked."""
     path = f"{sf_dir}/{name}.parquet"
-    cached = _SCHEMA_CACHE.get((sf_dir, name))
-    if cached is not None:
-        return spark.read.schema(cached).parquet(path)
-    return spark.read.parquet(path)
+    stamp = _file_stamp(path)
+    memo = _SCHEMA_CACHE.get((sf_dir, name))
+    if stamp is not None and memo is not None and memo[0] == stamp:
+        raw = spark.read.schema(memo[1]).parquet(path)
+    else:
+        raw = spark.read.parquet(path)
+    check_schema_contract(raw.schema, name)
+    if stamp is not None:
+        _SCHEMA_CACHE[(sf_dir, name)] = (stamp, raw.schema)
+    return raw
 
 
 def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = _read_fixture(spark, sf_dir, "events")
-    check_schema_contract(raw.schema, "events")
-    _SCHEMA_CACHE[(sf_dir, "events")] = raw.schema
     ts_us, ts = event_time_columns(raw.schema["ts"].dataType)
     value = F.col("value")
     if not isinstance(raw.schema["value"].dataType, DoubleType):
@@ -304,7 +321,4 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; have {TABLES}")
     if name == "events":
         return _load_events(spark, sf_dir)
-    raw = _read_fixture(spark, sf_dir, name)
-    check_schema_contract(raw.schema, name)
-    _SCHEMA_CACHE[(sf_dir, name)] = raw.schema
-    return _normalize_columns(raw, name)
+    return _normalize_columns(_read_fixture(spark, sf_dir, name), name)

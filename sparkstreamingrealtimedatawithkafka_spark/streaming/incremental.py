@@ -39,7 +39,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, StructField, StructType
+from pyspark.sql.types import LongType, StructField, StructType
 
 from sparkstreamingrealtimedatawithkafka_spark.operators.dedup import (
     minhash_band_table,
@@ -66,7 +66,9 @@ def dedup_batch_processor(
     toks_dir = f"{work_dir}/tokens"
     pairs_dir = f"{work_dir}/pairs"
 
-    part_field = StructField("batch_id", IntegerType(), True)
+    # Epoch ids are Java longs: an int32 read schema cannot hold a batch id
+    # past 2**31, and reading that batch's partitions back would fail.
+    part_field = StructField("batch_id", LongType(), True)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         batch = batch_df.select(

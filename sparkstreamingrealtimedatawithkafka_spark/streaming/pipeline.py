@@ -84,19 +84,38 @@ def parse_articles(raw: DataFrame, schema: StructType = ARTICLE_SCHEMA) -> DataF
     )
 
 
+def explode_once(df: DataFrame, array_col: str, alias: str) -> DataFrame:
+    """``df.select(F.explode(array_col).alias(alias))`` with the array
+    expression evaluated once per row.
+
+    A plain ``explode`` makes Catalyst's ``InferFiltersFromGenerate`` add a
+    ``size(arr) > 0`` filter below the Generate, and filter pushdown then
+    copies the expression producing ``arr`` into it: a pandas UDF there is
+    planned as a second ``ArrowEvalPython`` node and runs twice per row.
+    ``posexplode_outer`` infers no filter; dropping its ``pos IS NULL``
+    rows removes exactly the null and empty arrays ``explode`` drops, and
+    null elements inside an array survive as they do under ``explode``.
+    """
+    return (
+        df.select(F.posexplode_outer(array_col).alias("pos", alias))
+        .where(F.col("pos").isNotNull())
+        .select(alias)
+    )
+
+
 def entity_counts(text_df: DataFrame, use_udf: bool = False) -> DataFrame:
     """text → entities → explode → running count (spark_entity_counter.py:135-139).
 
     ``use_udf=True`` runs the Arrow pandas-UDF extractor plane (the
     reference's execution shape); default is the JVM column expression.
+    Either extractor runs once per document (:func:`explode_once`).
     Works identically on batch and streaming inputs.
     """
     entities = (
         TX.extract_entities_udf(F.col("text")) if use_udf else TX.extract_entities("text")
     )
     return (
-        text_df.withColumn("entities", entities)
-        .select(F.explode("entities").alias("entity"))
+        explode_once(text_df.withColumn("entities", entities), "entities", "entity")
         .groupBy("entity")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )

@@ -304,3 +304,16 @@ def test_schema_memo_does_not_bypass_contract(spark, tmp_path):
     pq.write_table(dropped, f"{d}/region.parquet")
     with pytest.raises(SchemaDriftError, match="missing column 'r_name'"):
         load_table(spark, d, "region")
+
+
+def test_schema_memo_sees_same_path_rewrite(spark, tmp_path):
+    """A fixture rewritten in place with a drifted schema must be checked
+    against the new file, not against the memoized schema of the old one."""
+    d = str(tmp_path / "rewrite")
+    os.makedirs(d)
+    t = pq.read_table(f"{SF_DIR}/region.parquet")
+    pq.write_table(t, f"{d}/region.parquet")
+    load_table(spark, d, "region")  # memoize the healthy schema
+    pq.write_table(t.drop_columns(["r_name"]), f"{d}/region.parquet")
+    with pytest.raises(SchemaDriftError, match="missing column 'r_name'"):
+        load_table(spark, d, "region")

@@ -20,6 +20,7 @@ from sparkstreamingrealtimedatawithkafka_spark.plans.streaming_queries import (
     _DOCS_SCHEMA,
 )
 from sparkstreamingrealtimedatawithkafka_spark.streaming.incremental import (
+    dedup_batch_processor,
     incremental_dedup_query,
 )
 from sparkstreamingrealtimedatawithkafka_spark.streaming.pipeline import as_stream_dir
@@ -67,3 +68,22 @@ def test_stream_equals_batch_and_slice_invariant(spark):
     s4 = _stream_pairs(spark, 4)
     assert s2 == batch
     assert s4 == batch
+
+
+def test_batch_id_past_int32_keeps_bands_and_pairs(spark, tmp_path):
+    """Epoch ids are Java longs. A batch id past 2**31 must still find its
+    own index partitions; an int32 partition schema cannot read them."""
+    batch_id = 2**31 + 7
+    docs = spark.createDataFrame(
+        [(1, "alpha bravo charlie delta echo"), (2, "alpha bravo charlie delta echo foxtrot")],
+        "doc_id long, text string",
+    ).select("doc_id", TX.word_shingles("text", 2).alias("sh"))
+    work = str(tmp_path)
+    process = dedup_batch_processor(spark, work, "doc_id", "sh", jaccard_threshold=0.4)
+    process(docs, batch_id)
+
+    bands = spark.read.parquet(f"{work}/bands")
+    assert bands.count() > 0
+    assert {r.batch_id for r in bands.select("batch_id").collect()} == {batch_id}
+    pairs = spark.read.parquet(f"{work}/pairs").collect()
+    assert [(r.id_a, r.id_b, r.batch_id) for r in pairs] == [(1, 2, batch_id)]
