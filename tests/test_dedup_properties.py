@@ -2,10 +2,13 @@
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from sparkstreamingrealtimedatawithkafka_spark.operators.dedup import (
     lsh_candidate_pairs,
+    minhash_signature_table,
     simhash_table,
 )
 
@@ -121,3 +124,47 @@ def test_max_bucket_cap_inert_on_healthy_corpus(spark):
     assert sorted(map(tuple, capped)) == sorted(map(tuple, exact))
     assert obs.get["buckets_dropped"] == 0
     assert obs.get["ids_in_dropped_buckets"] == 0
+
+
+def _minhash_reference(df, id_col, tokens_col, num_hashes):
+    """The column-builder formulation ``minhash_signature_table`` replaced."""
+    tok = df.select(
+        F.col(id_col).alias("id"),
+        F.explode(
+            F.transform(F.array_distinct(F.col(tokens_col)), lambda x: F.xxhash64(x))
+        ).alias("h0"),
+    )
+    mins = tok.groupBy("id").agg(
+        *[F.min(F.xxhash64("h0", F.lit(s))).alias(f"m{s}") for s in range(num_hashes)]
+    )
+    return mins.select(
+        "id", F.array(*[F.col(f"m{s}") for s in range(num_hashes)]).alias("sig")
+    )
+
+
+def _plan_shape(df) -> str:
+    """Optimized plan with expression ids and lambda variable ids removed."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return re.sub(r"\bx_\d+", "x", re.sub(r"#\d+L?", "#", plan))
+
+
+def test_minhash_signature_table_matches_column_builder_form(spark):
+    docs = spark.createDataFrame(
+        [
+            (1, ["alpha", "beta", "gamma"]),
+            (2, ["gamma", "beta", "alpha", "alpha"]),  # same set as 1
+            (3, ["delta"]),
+            (4, []),  # empty token set: absent from both tables
+            (5, ["beta", "epsilon", "zeta", "eta"]),
+        ],
+        "id long, toks array<string>",
+    )
+    new = minhash_signature_table(docs, "id", "toks", num_hashes=16)
+    ref = _minhash_reference(docs, "id", "toks", num_hashes=16)
+
+    assert new.schema == ref.schema
+    assert _plan_shape(new) == _plan_shape(ref)
+    rows = sorted(new.collect())
+    assert rows == sorted(ref.collect())
+    assert [r.id for r in rows] == [1, 2, 3, 5]
+    assert rows[0].sig == rows[1].sig and len(rows[0].sig) == 16
