@@ -4,7 +4,7 @@ local[$SPARK_GRAFT_CPUS] and prints TWO JSON lines:
 
 1. the FULL record {"metric": ..., "value": total_sec, "unit": "sec",
    "queries": {...}, "sf": ..., probes, canary ratios,
-   "delta_vs_prev": {...}} — commit this line as tools/bench_rN_local.json;
+   "delta_vs_prev": {...}} — commit this line as tools/bench_r<N>_local.json;
 2. a COMPACT summary (same scalars, delta summary instead of the per-key
    maps) printed LAST so it survives the round driver's ~2000-char stdout
    tail window and parses (the full line outgrew it at 73 keys).
@@ -69,6 +69,7 @@ sys.path.insert(0, str(REPO))
 
 from sparkstreamingrealtimedatawithkafka_spark.plans import REGISTRY  # noqa: E402
 from sparkstreamingrealtimedatawithkafka_spark.session import build_session  # noqa: E402
+from tools.perf_protocol import PROBE_PAR_REF, PROBE_SF, min_time  # noqa: E402
 
 # Headline set: the reference-parity pipeline, the relational core, event-time
 # semantics, and the LLM-pipeline operators (SURVEY.md §2 / §2.10).
@@ -367,28 +368,8 @@ def main() -> None:
     # repo's changes. Recorded as a diagnostic (which host phase the run
     # started in); it no longer feeds any normalization — the same-run
     # canary ratio below is the host-cancelling construction.
-    probe_dir = "/root/testdata/sf0.01"
-    probe_sec = None
-    for _ in range(3):
-        spark._jvm.System.gc()
-        t0 = time.time()
-        REGISTRY["q1_pricing_summary"].fn(spark, probe_dir).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        e = time.time() - t0
-        probe_sec = e if probe_sec is None else min(probe_sec, e)
-    probe_sec = round(probe_sec, 3)
-
-    # min of 2 runs per query: single local[32] runs vary ±2x on GC/paging
-    # noise; the min is the reproducible plan cost. Before each run:
-    # deterministic unpersist of orphan checkpoint blocks from PRIOR runs
-    # (System.gc() + ContextCleaner is async and races the next timing —
-    # measured a checkpointing entry degrade 13s -> 40s within one session
-    # purely from accumulated orphans), then the explicit GC that keeps one
-    # query's heap debt from landing as a multi-second old-gen pause inside
-    # a *later* query's timing (observed: unchanged queries swinging
-    # 1.1s <-> 5.2s run-over-run without it).
-    from tools.perf_protocol import _clear_orphan_persistent_rdds
+    q1 = REGISTRY["q1_pricing_summary"].fn
+    probe_sec = round(min_time(spark, lambda: q1(spark, PROBE_SF)), 3)
 
     def _probe_par_now() -> float:
         """Parallel probe: q1 at the BENCH sf, min-of-3. A fixed 32-way
@@ -396,17 +377,7 @@ def main() -> None:
         parallel throughput — the drift dimension the sf0.01 CPU probe is
         blind to (tools/bench_drift_r11.json: 68/73 keys >=1.2x slower at
         r11 open while the CPU probe matched r9 exactly)."""
-        best = None
-        for _ in range(3):
-            _clear_orphan_persistent_rdds(spark)
-            spark._jvm.System.gc()
-            t0 = time.time()
-            REGISTRY["q1_pricing_summary"].fn(spark, sf_dir).write.format(
-                "noop"
-            ).mode("overwrite").save()
-            e = time.time() - t0
-            best = e if best is None else min(best, e)
-        return round(best, 3)
+        return round(min_time(spark, lambda: q1(spark, sf_dir)), 3)
 
     probe_par = _probe_par_now()
 
@@ -419,18 +390,14 @@ def main() -> None:
     run_order = interleaved_order(list(BENCH_QUERIES), CANARY_KEYS)
     assert sorted(run_order) == sorted(BENCH_QUERIES)
 
+    # min of 2 runs per query: single local[32] runs vary ±2x on GC/paging
+    # noise; the min is the reproducible plan cost. Before each run, outside
+    # the timer, min_time unpersists orphan checkpoint blocks from PRIOR
+    # runs and runs an explicit GC (reasons in its docstring).
     times: dict[str, float] = {}
     for name in run_order:
-        best = None
-        for _ in range(2):
-            _clear_orphan_persistent_rdds(spark)
-            spark._jvm.System.gc()
-            t0 = time.time()
-            df = REGISTRY[name].fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            elapsed = time.time() - t0
-            best = elapsed if best is None else min(best, elapsed)
-        times[name] = round(best, 3)
+        fn = REGISTRY[name].fn
+        times[name] = round(min_time(spark, lambda: fn(spark, sf_dir), runs=2), 3)
 
     # End-of-run parallel probe: v3 normalizes by the START/END mean, not
     # a single end-phase sample — the same start/end symmetry v2 used for
@@ -464,7 +431,6 @@ def main() -> None:
         pass
 
     total = round(sum(times.values()), 3)
-    from tools.perf_protocol import PROBE_PAR_REF
 
     # Per-key delta vs the PREVIOUS COMMITTED record at MATCHED CANARY
     # (r11 verdict finding #2): for a key bracketed by canaries (a, b),
@@ -515,7 +481,7 @@ def main() -> None:
         "delta_vs_prev": delta_vs_prev,
     }
     # Full record first (the per-key map — save this line as the committed
-    # tools/bench_rN_local.json), then the COMPACT summary line LAST: the
+    # tools/bench_r<N>_local.json), then the COMPACT summary line LAST: the
     # round driver keeps only the final ~2000 chars of stdout and parses
     # the JSON it finds there; the full line outgrew that window at 73
     # keys (BENCH_r06/r07 both record parsed:null with the head of the
@@ -550,7 +516,7 @@ def compact_record(record: dict, budget: int = COMPACT_LINE_BUDGET) -> dict:
     window parses per-key data again (r14 verdict finding #1).
 
     Dropped relative to the full record (which the committed
-    tools/bench_rN_local.json keeps in full): ``delta_vs_prev`` (the
+    tools/bench_r<N>_local.json keeps in full): ``delta_vs_prev`` (the
     summary survives), the per-canary ratio map and canary key lists
     (``canary_ratio`` / ``canary_ratio_bw`` scalars survive), and the
     redundant probe samples (``probe_par_mean`` survives).

@@ -40,66 +40,64 @@ from sparkstreamingrealtimedatawithkafka_spark.plans import (  # noqa: F401,E402
 # each round open (when the driver commits the previous round's
 # artifact) forces a recompute and re-certification recency has a floor
 # that only improves.
-WINDOW_ROUND = 15
+WINDOW_ROUND = 16
 
-# rotation_window(14): parity pair + the 48 stalest — the r8-vintage
-# text/UDAF tier (4), the r9 batch (43: the agg/stats tier, the events
-# analytics block, merge/privacy/setop surfaces, the connector sinks,
-# and the streaming alarm tail), and the r10 leftover (1).
+# rotation_window(15): parity pair + the 48 stalest — the r10 batch (42:
+# the multimodal decoders, the sink/source connector surfaces, the SQL
+# surface block and the text analytics tail) and the r11 agg tier (6).
 DRIVER_WINDOW = [
     "flagship_entity_count",
     "pipeline_parity_udf",
-    # last certified r8 (4):
-    "text_chunker",
-    "text_winnowing_fingerprints",
-    "udaf_grouped_agg_pandas",
-    "web_url_normalize",
-    # last certified r9 (43):
-    "agg_argmax_minby",
-    "agg_correlation_matrix",
-    "agg_countmin_sketch",
-    "agg_higher_moments",
-    "agg_linear_regression",
-    "decontaminate_ngram_overlap",
-    "dedup_ngram_jaccard",
-    "events_anomaly_zscore",
-    "events_asof_nearest",
-    "events_cohort_retention",
-    "events_funnel_conversion",
-    "events_gapfill_resample",
-    "events_growth_accounting",
-    "events_json_extract",
-    "events_rolling_wau",
-    "events_sessionization_stats",
-    "events_transition_matrix",
-    "geo_grid_distance_join",
-    "graph_link_prediction_jaccard",
-    "join_bucketed_colocated",
-    "lateral_topk_per_brand",
-    "merge_scd2_history",
-    "merge_upsert_scd1",
-    "ml_confusion_metrics",
-    "ml_score_logistic",
-    "privacy_k_anonymity",
-    "privacy_l_diversity",
-    "q16_supplier_cnt",
-    "q21_sole_blame_suppliers",
-    "q2_min_cost_supplier",
-    "q8_market_share",
-    "q9_product_profit",
-    "sink_partitioned_parquet",
-    "source_csv_json_roundtrip",
-    "streaming_cusum_alarms",
-    "streaming_dedup_keys",
-    "streaming_topk_trending",
-    "text_bpe_token_count",
-    "unpivot_melt",
-    "web_domain_quota",
-    "web_robots_filter",
-    "window_analytics",
-    "window_function_suite",
-    # last certified r10 (1):
-    "ab_test_welch_t",
+    # last certified r10 (42):
+    "agg_bitmap_exact_distinct",
+    "basket_affinity_lift",
+    "dedup_exact_normalized",
+    "dedup_two_stage",
+    "events_asof_next_purchase",
+    "fuzzy_match_levenshtein",
+    "graph_khop_reach",
+    "multimodal_decode_bmp",
+    "multimodal_decode_wav",
+    "multimodal_image_dhash",
+    "multimodal_resample_wav",
+    "sink_compacted_parquet",
+    "sink_python_stream_writer",
+    "sink_range_clustered_parquet",
+    "sink_zorder_clustered_parquet",
+    "source_csv_malformed_permissive",
+    "source_dynamic_partition_pruning",
+    "source_file_metadata_provenance",
+    "source_orc_roundtrip",
+    "source_python_datasource",
+    "source_python_pushdown",
+    "source_python_stream_datasource",
+    "source_schema_evolution_union",
+    "source_xml_roundtrip",
+    "sql_execute_immediate",
+    "sql_join_hints",
+    "sql_modern_surface",
+    "sql_parameterized_queries",
+    "sql_pipe_syntax",
+    "sql_scripting_block",
+    "sql_table_cache",
+    "sql_udf_create_function",
+    "state_store_inspection",
+    "streaming_incremental_dedup",
+    "streaming_static_join",
+    "text_bpe_encode",
+    "text_cooccurrence_pmi",
+    "text_inverted_postings",
+    "text_tfidf_keywords",
+    "text_unigram_surprisal",
+    "udtf_table_argument",
+    "variant_malformed_probes",
+    # last certified r11 (6):
+    "ab_cuped_adjustment",
+    "agg_approx_topk_heavy_hitters",
+    "agg_covariance",
+    "agg_exact_percentiles",
+    "agg_grouping_sets_custom",
+    "agg_listagg_sorted",
 ]
 
 reorder(DRIVER_WINDOW, window=50)

@@ -3893,7 +3893,8 @@ def text_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes its first step the identity on th[i] < M), and the window min
     is ``least()`` over the 5 gets. No plan-shape change — the same ONE
     codegen stage — but the per-token expression work drops measurably:
-    interleaved min-of-10 A/B at sf0.1 (tools/ab_winnow_r15.py), stage
+    interleaved min-of-10 A/B at sf0.1 (the ab_winnow_r15.py script at
+    commit 8f4ace0; OPTIMIZATION_r15.md), stage
     executorCpuTime min 6.08 → 3.98 s (−35%), median 6.91 → 5.15 s,
     executorRunTime median 9.97 → 8.33 s, rows identical (exceptAll both
     ways empty). Wall time at sf0.1 is flat (~0.76 s) because 32-way
@@ -4452,7 +4453,8 @@ def similarity_auto_pairs(
     materialize what the gate read lazily. Going further and dropping
     the shingle checkpoint too was interleaved-A/B'd and REJECTED: the
     est job then recomputes the shingle chain twice (min 2.87 vs 2.41 s,
-    median 3.06 vs 2.66 s over 10 alternations, tools/ab_router_r15.py —
+    median 3.06 vs 2.66 s over 10 alternations, the ab_router_r15.py
+    script at commit 8f4ace0 —
     fewer jobs is not faster when each job duplicates work). The
     estimate itself is bit-identical in every shape (exact integer
     aggregate; checkpointing does not change values), so the routing

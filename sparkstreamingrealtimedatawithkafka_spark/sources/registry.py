@@ -264,10 +264,11 @@ def event_time_columns(ts_type) -> tuple:
 
 # Resolved-schema memo. ``spark.read.parquet`` without an explicit schema
 # runs a footer-inference JOB per call — 93 of the 540 jobs in a full bench
-# pass were these (tools/profile_r15). After the first load resolves (and
-# contract-checks) a table's schema, later loads pass it explicitly and skip
-# the job. This memoizes METADATA only — every query still reads row data
-# from the parquet files; no results or intermediates are cached. Keyed by
+# pass were these (tools/profile_r15_jobs.json). After the first load
+# resolves (and contract-checks) a table's schema, later loads pass it
+# explicitly and skip the job. This memoizes METADATA only — every query
+# still reads row data from the parquet files; no results or
+# intermediates are cached. Keyed by
 # (sf_dir, name); each entry carries the file's (mtime_ns, size) stamp from
 # when it was read, and a load whose stamp differs re-infers, so a file
 # rewritten at the same path is checked against its own schema, never the

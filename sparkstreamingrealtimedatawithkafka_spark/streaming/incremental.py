@@ -80,7 +80,8 @@ def dedup_batch_processor(
         # (the r1-r14 shape evaluated it three times — band checkpoint,
         # verification union, tokens append — and paid a localCheckpoint
         # job to share the band table between join and append; measured
-        # 52 -> fewer jobs / -3s warm at sf0.01, tools/profile_stream_r15).
+        # 52 -> fewer jobs / -3s warm at sf0.01,
+        # tools/profile_stream_r15_before.json vs _after.json).
         # Explicit read schemas skip parquet footer inference per batch.
         # Idempotent writes: all three tables are partitioned by batch_id
         # and written with dynamic partition overwrite, so replay REPLACES

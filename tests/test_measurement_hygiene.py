@@ -2,18 +2,23 @@
 tools must deterministically unpersist orphan checkpoint blocks between
 timed runs (System.gc() + ContextCleaner is async and races the next run —
 measured dedup_snm_multipass read 9.84x at 10x polluted vs 5.64x clean).
-These pin the cleaner's contract so a tool refactor can't silently revert
-to the racy GC-only discipline."""
+These pin the one cleaner's contract, and that every timing tool goes
+through it, so a tool refactor can't silently revert to the racy GC-only
+discipline."""
 
 from __future__ import annotations
 
+import ast
 import sys
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
-from tools.perf_protocol import _clear_orphan_persistent_rdds  # noqa: E402
-from tools.scale_check import clear_orphan_persistent_rdds  # noqa: E402
+import bench  # noqa: E402
+import tools.scale_check as scale_check  # noqa: E402
+from tools import perf_protocol  # noqa: E402
+from tools.perf_protocol import clear_orphan_persistent_rdds, min_time  # noqa: E402
 
 
 def _n_persistent(spark) -> int:
@@ -31,12 +36,33 @@ def test_clear_removes_orphan_checkpoint_blocks(spark):
     assert _n_persistent(spark) == 0
 
 
+def _imports_min_time(path: Path) -> bool:
+    return any(
+        isinstance(node, ast.ImportFrom)
+        and node.module == "tools.perf_protocol"
+        and any(a.name == "min_time" for a in node.names)
+        for node in ast.walk(ast.parse(path.read_text()))
+    )
+
+
 def test_both_tools_share_the_same_contract(spark):
-    """bench.py imports perf_protocol's cleaner; scale_check has its own.
-    Both must empty the persistent-RDD registry."""
+    """bench.py, scale_check and profile time through perf_protocol's one
+    min-of-N helper, which empties the persistent-RDD registry before every
+    run; no other timing file keeps its own GC or unpersist loop."""
+    assert bench.min_time is perf_protocol.min_time
+    assert scale_check.min_time is perf_protocol.min_time
+    # profile.py imports the engine inside main() (see its docstring).
+    assert _imports_min_time(REPO / "tools" / "profile.py")
+    for path in [REPO / "bench.py", *sorted((REPO / "tools").glob("*.py"))]:
+        if path.name == "perf_protocol.py":
+            continue
+        code = path.read_text()
+        assert "_jvm.System.gc" not in code, path
+        assert "getPersistentRDDs" not in code, path
+
     spark.range(50).localCheckpoint().count()
     assert _n_persistent(spark) >= 1
-    _clear_orphan_persistent_rdds(spark)
+    min_time(spark, lambda: spark.range(10), runs=1)
     assert _n_persistent(spark) == 0
 
 

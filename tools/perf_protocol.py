@@ -1,15 +1,19 @@
 """Reproducible end-to-end perf protocol — the judge's measurement, as a
-committed tool, so perf claims in SURVEY are made against the same
-procedure that audits them.
+committed tool, so perf claims are made against the same procedure that
+audits them. ``bench.py``, ``scale_check.py`` and ``profile.py`` time
+through this module's ``min_time`` and its one orphan-RDD cleaner.
 
 Protocol (per query name given on the command line):
   1. FRESH SparkSession (this process — run the script once per claim;
-     do not reuse a long-lived REPL session with prior heap debt);
+     do not reuse a long-lived REPL session with prior heap debt) on
+     local[$SPARK_GRAFT_CPUS] (default 32), the bench's session shape,
+     plus any ``--conf k=v`` pairs;
   2. warmup: the standard bench warmup (q1 at the target sf boots
      codegen + the parquet reader; the sf0.001 UDF entry boots the
      Python worker pool) plus one throwaway run of the measured query
      itself at sf0.001 so first-compilation of ITS plan is excluded;
-  3. explicit JVM GC before each timed run;
+  3. before each timed run, outside the timer: synchronous unpersist of
+     orphan persistent RDDs, then an explicit JVM GC;
   4. min-of-3 END-TO-END runs: plan construction + full noop-sink
      execution timed together — never a sum of separately-profiled
      stages (stages overlap allocation/GC pressure that only shows up
@@ -25,13 +29,15 @@ purely with background load, which is exactly the drift the probe
 divides out.
 
 Usage: python tools/perf_protocol.py QUERY [QUERY...] [--sf-dir DIR]
+                                     [--conf k=v ...]
 Prints one JSON line:
-{"sf_dir": ..., "runs": 3, "probe_sec": ..., "times": {name: sec}}
+{"sf_dir": ..., "confs": {...}, "runs": 3, "probe_sec": ..., "times": {name: sec}}
 """
 
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 from pathlib import Path
@@ -51,13 +57,14 @@ PROBE_REF = 0.53  # q1@sf0.01 min-of-3 on this host class, idle
 # sf0.01 CPU probe is blind to multi-core/memory-bandwidth loss; this one
 # is not.
 PROBE_PAR_REF = 0.489
+RUNS = 3
 
 
-def _noop(df) -> None:
+def noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _clear_orphan_persistent_rdds(spark) -> None:
+def clear_orphan_persistent_rdds(spark) -> None:
     """Synchronously unpersist every persistent RDD between timed runs.
     System.gc() alone hands cleanup to the ASYNC ContextCleaner, which
     races the next run — orphan localCheckpoint blocks from run N of a
@@ -69,56 +76,76 @@ def _clear_orphan_persistent_rdds(spark) -> None:
         rdd.unpersist(True)
 
 
-def measure_probe(spark) -> float:
-    """q1 at sf0.01, min-of-3 — the fixed CPU-bound host-speed probe."""
+def min_time(spark, build, runs: int = RUNS) -> float:
+    """Min over ``runs`` of the wall seconds of ``build()`` plus a noop
+    write of the DataFrame it returns. ``build`` is a thunk so plans with
+    eager jobs at construction (localCheckpoint, observe, collect) are
+    charged their full end-to-end cost. Before each run, outside the
+    timer: clear orphan persistent RDDs, then an explicit JVM GC — without
+    both, one query's block-manager pressure and heap debt landed in a
+    later query's timing (observed: unchanged queries swinging
+    1.1 s <-> 5.2 s run-over-run)."""
     best = None
-    for _ in range(3):
-        _clear_orphan_persistent_rdds(spark)
+    for _ in range(runs):
+        clear_orphan_persistent_rdds(spark)
         spark._jvm.System.gc()
         t0 = time.time()
-        _noop(REGISTRY["q1_pricing_summary"].fn(spark, PROBE_SF))
+        noop(build())
         elapsed = time.time() - t0
         best = elapsed if best is None else min(best, elapsed)
-    return round(best, 3)
+    return best
+
+
+def measure_probe(spark) -> float:
+    """q1 at sf0.01, min-of-3 — the fixed CPU-bound host-speed probe."""
+    q1 = REGISTRY["q1_pricing_summary"].fn
+    return round(min_time(spark, lambda: q1(spark, PROBE_SF)), 3)
 
 
 def main() -> int:
     args = sys.argv[1:]
     sf_dir = "/root/testdata/sf0.1"
-    if "--sf-dir" in args:
-        i = args.index("--sf-dir")
-        sf_dir = args[i + 1]
-        args = args[:i] + args[i + 2 :]
-    names = args
+    confs: dict[str, str] = {}
+    names: list[str] = []
+    i = 0
+    while i < len(args):
+        if args[i] == "--sf-dir":
+            sf_dir = args[i + 1]
+            i += 2
+        elif args[i] == "--conf":
+            k, v = args[i + 1].split("=", 1)
+            confs[k] = v
+            i += 2
+        else:
+            names.append(args[i])
+            i += 1
     if not names:
-        print("usage: perf_protocol.py QUERY [QUERY...] [--sf-dir DIR]")
+        print("usage: perf_protocol.py QUERY [QUERY...] [--sf-dir DIR] [--conf k=v ...]")
         return 2
 
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = build_session(
-        app_name="perf-protocol", master="local[32]", shuffle_partitions=32
+        app_name="perf-protocol",
+        master=f"local[{cpus}]",
+        shuffle_partitions=int(cpus),
+        extra=confs,
     )
-    _noop(REGISTRY["q1_pricing_summary"].fn(spark, sf_dir))
-    _noop(REGISTRY["pipeline_parity_udf"].fn(spark, WARM_SF))
+    noop(REGISTRY["q1_pricing_summary"].fn(spark, sf_dir))
+    noop(REGISTRY["pipeline_parity_udf"].fn(spark, WARM_SF))
     probe = measure_probe(spark)
 
     times: dict[str, float] = {}
     for name in names:
-        _noop(REGISTRY[name].fn(spark, WARM_SF))  # compile ITS plan once
-        best = None
-        for _ in range(3):
-            _clear_orphan_persistent_rdds(spark)
-            spark._jvm.System.gc()
-            t0 = time.time()
-            _noop(REGISTRY[name].fn(spark, sf_dir))
-            elapsed = time.time() - t0
-            best = elapsed if best is None else min(best, elapsed)
-        times[name] = round(best, 3)
+        fn = REGISTRY[name].fn
+        noop(fn(spark, WARM_SF))  # compile ITS plan once
+        times[name] = round(min_time(spark, lambda: fn(spark, sf_dir)), 3)
     probe_end = measure_probe(spark)
     print(
         json.dumps(
             {
                 "sf_dir": sf_dir,
-                "runs": 3,
+                "confs": confs,
+                "runs": RUNS,
                 "probe_sec": probe,
                 "probe_sec_end": probe_end,
                 "probe_ref": PROBE_REF,

@@ -1,15 +1,19 @@
-"""Scale-up experiment: do the headline plans scale linearly?
+"""Scale-up experiment: do the catalog's plan shapes scale linearly?
 
-Materializes a 10x copy of sf0.1's lineitem/orders (6M / 1.5M rows) by
-exploding each row 10 times with perturbed keys (orderkey' = orderkey*10+i,
-so key cardinality scales with data — duplicating keys would instead grow
-groups), then times the q1 aggregation shape and the q3 join+agg shape at
-1x and 10x and prints the scaling ratios.
+Materializes 10x copies of sf0.1's lineitem/orders, documents, events,
+part and embeddings by exploding each row 10 times with perturbed keys
+(orderkey' = orderkey*10+i, so key cardinality scales with data —
+duplicating keys would instead grow groups; each materializer's
+docstring names its regime), then times each shape in ``SHAPES`` at 1x
+and 10x — min-of-3 through ``perf_protocol.min_time`` — and prints the
+scaling ratios, one JSON line per shape and a summary line last.
 
 A plan that holds at 100 TB should show time ratio ~= data ratio (linear):
 sub-linear means fixed overhead still dominates at this size; super-linear
 means a shuffle/skew/memory cliff — investigate before believing the 100 TB
-story. Run: python tools/scale_check.py
+story.
+
+Usage: python tools/scale_check.py [shape ...]   (no names: every shape)
 """
 
 from __future__ import annotations
@@ -17,13 +21,13 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 from pyspark.sql import functions as F  # noqa: E402
+from pyspark.sql.window import Window  # noqa: E402
 
 from sparkstreamingrealtimedatawithkafka_spark.functions import text as TX  # noqa: E402
 from sparkstreamingrealtimedatawithkafka_spark.operators.dedup import (  # noqa: E402
@@ -34,12 +38,17 @@ from sparkstreamingrealtimedatawithkafka_spark.session import build_session  # n
 from sparkstreamingrealtimedatawithkafka_spark.sources.registry import (  # noqa: E402
     load_table,
 )
+from tools.perf_protocol import min_time, noop  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.1"
 # v2: 10x orders now also jitters o_orderdate (+i days) so keyed change
 # streams (SCD-2) genuinely grow 10x instead of collapsing in the groupBy
 SCALE_DIR = os.path.join(os.environ.get("TMPDIR", "/tmp"), "ssk_scale10_v2")
 FACTOR = 10
+# The tables with a materialized 10x copy (five materializers: lineitem
+# and orders share one); ccstar_path's path graph scales by FACTOR too.
+SCALED = ("lineitem", "orders", "documents", "events", "part", "embeddings")
+PATH_NODES = 100_000
 
 
 def materialize(spark) -> None:
@@ -572,7 +581,7 @@ def winnow_shape(docs):
     the chain into a filter and go quadratic per doc), fingerprint
     groupBy. The shuffled volume is ~2/(w+1) of the shingle count —
     the ratio should track the compute (linear in corpus chars)."""
-    spark = _SPARK
+    spark = docs.sparkSession
     toks = F.filter(F.split("text", " "), lambda x: x != F.lit(""))
     d = (
         docs.filter(F.col("text").isNotNull())
@@ -735,20 +744,17 @@ def snm_shape(docs):
     return pairs.agg(F.count(F.lit(1)).alias("n_pairs"))
 
 
-def ccstar_path_shape(n_nodes):
-    """connected_components_star on a PATH of n_nodes — the adversarial
-    high-diameter graph min-label propagation cannot finish (it needs
-    diameter-many rounds; the star contraction needs ~log n
+def ccstar_path_shape(path):
+    """connected_components_star on a PATH graph (``path_edges``) — the
+    adversarial high-diameter graph min-label propagation cannot finish
+    (it needs diameter-many rounds; the star contraction needs ~log n
     alternations). The 10x row grows the path 10x, so the expected cost
     is ~10x * (log 10n / log n) — near-linear, NOT diameter-linear."""
     from sparkstreamingrealtimedatawithkafka_spark.operators.graph import (
         connected_components_star,
     )
 
-    e = _SPARK.range(1, n_nodes).select(
-        F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
-    )
-    labels = connected_components_star(e)
+    labels = connected_components_star(path)
     return labels.agg(
         F.count(F.lit(1)).alias("n"), F.sum("label").alias("s")
     )
@@ -854,9 +860,6 @@ def snm_multipass_shape(docs):
     )
 
 
-from pyspark.sql.window import Window  # noqa: E402
-
-
 def skyline_shape(parts):
     """part_skyline_pareto's two-level shape: domain-bounded price buckets,
     per-bucket max + tiny prefix window, fact windows partitioned by bucket
@@ -891,9 +894,6 @@ def skyline_shape(parts):
         >= F.col("p_size")
     ) | (F.col("same_price_max") > F.col("p_size"))
     return scored.filter(~dominated).agg(F.count(F.lit(1)).alias("n_frontier"))
-
-
-_SPARK = None
 
 
 def pps_shape(o):
@@ -1115,105 +1115,6 @@ def sim_auto_shape(docs):
 
     pairs = similarity_auto_pairs(docs)
     return pairs.groupBy("route").agg(F.count(F.lit(1)).alias("n_pairs"))
-
-
-def clear_orphan_persistent_rdds(spark) -> None:
-    """Synchronously unpersist every persistent RDD. System.gc() +
-    ContextCleaner is ASYNC — the cleaner thread races the next timed run,
-    so orphan localCheckpoint blocks from earlier runs of the SAME shape
-    still pollute it (observed: dedup_snm_multipass 13.1 s fresh-session
-    vs 40.2 s third-in-session — a 3x phantom regression purely from
-    accumulated ranked-table checkpoints). Called between timed runs, when
-    nothing under measurement is alive, so nothing correct can be evicted."""
-    for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-        rdd.unpersist(True)
-
-
-def run_noop(mk) -> float:
-    """mk is a THUNK: the clock starts before construction so shapes with
-    eager localCheckpoints (which execute at construction) are charged
-    their full end-to-end cost. Before each run: deterministic unpersist
-    of ALL orphan checkpoint blocks (see clear_orphan_persistent_rdds),
-    then an explicit GC — without both, block-manager pressure from
-    earlier shapes was charged to whatever ran later (observed: basket
-    3x -> 17x run-over-run purely from accumulation order)."""
-    if _SPARK is not None:
-        clear_orphan_persistent_rdds(_SPARK)
-        _SPARK._jvm.System.gc()
-    t0 = time.time()
-    df = mk()
-    df.write.format("noop").mode("overwrite").save()
-    return time.time() - t0
-
-
-def main() -> None:
-    global _SPARK
-    spark = build_session(app_name="ssk-scale-check")
-    _SPARK = spark
-    materialize(spark)
-    materialize_docs(spark)
-    materialize_events(spark)
-    materialize_parts(spark)
-
-    li1 = load_table(spark, SF_DIR, "lineitem")
-    o1 = load_table(spark, SF_DIR, "orders")
-    li10 = spark.read.parquet(os.path.join(SCALE_DIR, "lineitem"))
-    o10 = spark.read.parquet(os.path.join(SCALE_DIR, "orders"))
-    docs1 = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    docs10 = spark.read.parquet(os.path.join(SCALE_DIR, "documents"))
-    ev1 = load_table(spark, SF_DIR, "events")
-    ev10 = spark.read.parquet(os.path.join(SCALE_DIR, "events"))
-    cust1 = load_table(spark, SF_DIR, "customer").select("c_custkey", "c_acctbal")
-    part1 = load_table(spark, SF_DIR, "part").select("p_partkey", "p_name")
-    part10 = spark.read.parquet(os.path.join(SCALE_DIR, "part"))
-
-    # warm up the JVM/codegen/readers so 1x isn't charged the boot cost
-    run_noop(lambda: q1_shape(li1))
-    run_noop(lambda: q3_shape(li1, o1))
-
-    out = {"factor": FACTOR, "rows_1x": li1.count(), "rows_10x": li10.count()}
-    # Thunks, not DataFrames: shapes with eager localCheckpoints execute
-    # work at CONSTRUCTION time, so building them outside the timer would
-    # under-report. Each timed run constructs AND executes end-to-end
-    # (the perf_protocol posture).
-    for name, d1, d10 in (
-        ("q1_agg", lambda: q1_shape(li1), lambda: q1_shape(li10)),
-        ("q3_join_agg", lambda: q3_shape(li1, o1), lambda: q3_shape(li10, o10)),
-        ("minhash_lsh_dedup", lambda: dedup_shape(docs1), lambda: dedup_shape(docs10)),
-        ("incremental_dedup", lambda: incr_dedup_shape(docs1), lambda: incr_dedup_shape(docs10)),
-        ("asof_join", lambda: asof_shape(ev1), lambda: asof_shape(ev10)),
-        ("gapfill_resample", lambda: gapfill_shape(ev1), lambda: gapfill_shape(ev10)),
-        ("merge_scd2", lambda: scd2_shape(cust1, o1), lambda: scd2_shape(cust1, o10)),
-        ("fuzzy_twostage", lambda: fuzzy_shape(part1), lambda: fuzzy_shape(part10)),
-        ("bm25_search", lambda: bm25_shape(docs1), lambda: bm25_shape(docs10)),
-        ("pack_sequences", lambda: pack_shape(docs1), lambda: pack_shape(docs10)),
-        ("rolling_wau", lambda: wau_shape(ev1), lambda: wau_shape(ev10)),
-        ("basket_affinity", lambda: basket_shape(li1), lambda: basket_shape(li10)),
-        ("pareto_deciles", lambda: pareto_shape(li1), lambda: pareto_shape(li10)),
-        ("welch_t", lambda: welch_shape(li1), lambda: welch_shape(li10)),
-        ("chi2_cells", lambda: chi2_shape(ev1), lambda: chi2_shape(ev10)),
-        ("tfidf_topk", lambda: tfidf_shape(docs1), lambda: tfidf_shape(docs10)),
-        ("pps_sampling", lambda: pps_shape(o1), lambda: pps_shape(o10)),
-        ("pagerank_5iter", lambda: pagerank_shape(li1), lambda: pagerank_shape(li10)),
-        ("growth_accounting", lambda: growth_shape(ev1), lambda: growth_shape(ev10)),
-        ("tree_ensemble_score", lambda: tree_score_shape(li1), lambda: tree_score_shape(li10)),
-        ("khop_bfs", lambda: khop_shape(li1), lambda: khop_shape(li10)),
-        ("link_prediction", lambda: linkpred_shape(li1), lambda: linkpred_shape(li10)),
-        ("feature_hashing", lambda: feat_hash_shape(docs1), lambda: feat_hash_shape(docs10)),
-        ("winnowing_fp", lambda: winnow_shape(docs1), lambda: winnow_shape(docs10)),
-    ):
-        t1 = min(run_noop(d1), run_noop(d1))
-        t10 = min(run_noop(d10), run_noop(d10))
-        out[name] = {
-            "t_1x_sec": round(t1, 3),
-            "t_10x_sec": round(t10, 3),
-            "time_ratio": round(t10 / t1, 2),
-        }
-    print(json.dumps(out))
-
-
-if __name__ == "__main__":
-    main()
 
 
 def materialize_embeddings(spark) -> None:
@@ -1489,3 +1390,115 @@ def clamp_shape(ev):
     return b.groupBy("user_id").agg(
         F.max("bal").alias("mx"), F.count(F.lit(1)).alias("n")
     ).agg(F.sum("mx").alias("s"), F.sum("n").alias("n"))
+
+
+def path_edges(spark, n_nodes):
+    return spark.range(1, n_nodes).select(
+        F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
+    )
+
+
+def inputs(spark, sf_dir=SF_DIR, scale_dir=None) -> dict:
+    """The shapes' input frames: at 1x from ``sf_dir``, or at 10x from the
+    materialized copies in ``scale_dir``. ``customer`` stays 1x on both
+    sides (the SCD-2 row grows the change stream, not the dimension)."""
+    if scale_dir is None:
+        t = {n: load_table(spark, sf_dir, n) for n in SCALED}
+        t["documents"] = t["documents"].select("doc_id", "text")
+        t["path"] = path_edges(spark, PATH_NODES)
+    else:
+        t = {n: spark.read.parquet(os.path.join(scale_dir, n)) for n in SCALED}
+        t["path"] = path_edges(spark, PATH_NODES * FACTOR)
+    t["customer"] = load_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_acctbal"
+    )
+    return t
+
+
+# name -> shape over an inputs() dict. Thunks, not DataFrames: shapes with
+# eager localCheckpoints execute work at CONSTRUCTION time, so building
+# them outside the timer would under-report; each timed run constructs
+# AND executes end-to-end (perf_protocol.min_time).
+SHAPES = {
+    "q1_agg": lambda t: q1_shape(t["lineitem"]),
+    "q3_join_agg": lambda t: q3_shape(t["lineitem"], t["orders"]),
+    "minhash_lsh_dedup": lambda t: dedup_shape(t["documents"]),
+    "incremental_dedup": lambda t: incr_dedup_shape(t["documents"]),
+    "asof_join": lambda t: asof_shape(t["events"]),
+    "gapfill_resample": lambda t: gapfill_shape(t["events"]),
+    "merge_scd2": lambda t: scd2_shape(t["customer"], t["orders"]),
+    "fuzzy_twostage": lambda t: fuzzy_shape(t["part"]),
+    "bm25_search": lambda t: bm25_shape(t["documents"]),
+    "pack_sequences": lambda t: pack_shape(t["documents"]),
+    "rolling_wau": lambda t: wau_shape(t["events"]),
+    "basket_affinity": lambda t: basket_shape(t["lineitem"]),
+    "pareto_deciles": lambda t: pareto_shape(t["lineitem"]),
+    "welch_t": lambda t: welch_shape(t["lineitem"]),
+    "chi2_cells": lambda t: chi2_shape(t["events"]),
+    "tfidf_topk": lambda t: tfidf_shape(t["documents"]),
+    "pps_sampling": lambda t: pps_shape(t["orders"]),
+    "pagerank_5iter": lambda t: pagerank_shape(t["lineitem"]),
+    "growth_accounting": lambda t: growth_shape(t["events"]),
+    "tree_ensemble_score": lambda t: tree_score_shape(t["lineitem"]),
+    "khop_bfs": lambda t: khop_shape(t["lineitem"]),
+    "link_prediction": lambda t: linkpred_shape(t["lineitem"]),
+    "feature_hashing": lambda t: feat_hash_shape(t["documents"]),
+    "winnowing_fp": lambda t: winnow_shape(t["documents"]),
+    "pca_gram": lambda t: pca_gram_shape(t["embeddings"]),
+    "countmin": lambda t: countmin_shape(t["lineitem"]),
+    "mad_2pass": lambda t: mad_shape(t["events"]),
+    "lpa_4rounds": lambda t: lpa_shape(t["lineitem"]),
+    "image_dhash": lambda t: dhash_shape(t["documents"]),
+    "poisson_bootstrap": lambda t: bootstrap_shape(t["orders"]),
+    "kcore_3peel": lambda t: kcore_shape(t["lineitem"]),
+    "cep_paths": lambda t: cep_shape(t["events"]),
+    "clamp_balance": lambda t: clamp_shape(t["events"]),
+    "ppjoin_exact": lambda t: ppjoin_shape(t["documents"]),
+    "snm_linear": lambda t: snm_shape(t["documents"]),
+    "ts_subseq_search": lambda t: tsss_shape(t["events"]),
+    "ccstar_path": lambda t: ccstar_path_shape(t["path"]),
+    "decontaminate": lambda t: decon_shape(t["documents"]),
+    "snm_multipass": lambda t: snm_multipass_shape(t["documents"]),
+    "skyline_2d": lambda t: skyline_shape(t["part"]),
+    "full_dedup_pipeline": lambda t: full_dedup_shape(t["documents"]),
+    "containment": lambda t: containment_shape(t["documents"]),
+    "audio_fingerprint": lambda t: audio_fp_shape(t["documents"]),
+    "similarity_auto": lambda t: sim_auto_shape(t["documents"]),
+}
+
+
+def main() -> None:
+    names = sys.argv[1:] or list(SHAPES)
+    unknown = [n for n in names if n not in SHAPES]
+    if unknown:
+        raise SystemExit(f"unknown shape(s) {unknown}; known: {sorted(SHAPES)}")
+    spark = build_session(app_name="ssk-scale-check")
+    for m in (materialize, materialize_docs, materialize_events,
+              materialize_parts, materialize_embeddings):
+        m(spark)
+    t1, t10 = inputs(spark), inputs(spark, scale_dir=SCALE_DIR)
+
+    # warm up the JVM/codegen/readers so 1x isn't charged the boot cost
+    noop(SHAPES["q1_agg"](t1))
+    noop(SHAPES["q3_join_agg"](t1))
+
+    out = {
+        "factor": FACTOR,
+        "rows_1x": t1["lineitem"].count(),
+        "rows_10x": t10["lineitem"].count(),
+    }
+    for name in names:
+        shape = SHAPES[name]
+        s1 = min_time(spark, lambda: shape(t1))
+        s10 = min_time(spark, lambda: shape(t10))
+        out[name] = {
+            "t_1x_sec": round(s1, 3),
+            "t_10x_sec": round(s10, 3),
+            "time_ratio": round(s10 / s1, 2),
+        }
+        print(json.dumps({name: out[name]}), flush=True)
+    print(json.dumps(out))
+
+
+if __name__ == "__main__":
+    main()
