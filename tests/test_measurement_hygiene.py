@@ -8,7 +8,6 @@ discipline."""
 
 from __future__ import annotations
 
-import ast
 import sys
 from pathlib import Path
 
@@ -17,7 +16,7 @@ sys.path.insert(0, str(REPO))
 
 import bench  # noqa: E402
 import tools.scale_check as scale_check  # noqa: E402
-from tools import perf_protocol  # noqa: E402
+from tools import key_profile, perf_protocol  # noqa: E402
 from tools.perf_protocol import clear_orphan_persistent_rdds, min_time  # noqa: E402
 
 
@@ -36,23 +35,13 @@ def test_clear_removes_orphan_checkpoint_blocks(spark):
     assert _n_persistent(spark) == 0
 
 
-def _imports_min_time(path: Path) -> bool:
-    return any(
-        isinstance(node, ast.ImportFrom)
-        and node.module == "tools.perf_protocol"
-        and any(a.name == "min_time" for a in node.names)
-        for node in ast.walk(ast.parse(path.read_text()))
-    )
-
-
 def test_both_tools_share_the_same_contract(spark):
-    """bench.py, scale_check and profile time through perf_protocol's one
+    """bench.py, scale_check and key_profile time through perf_protocol's one
     min-of-N helper, which empties the persistent-RDD registry before every
     run; no other timing file keeps its own GC or unpersist loop."""
     assert bench.min_time is perf_protocol.min_time
     assert scale_check.min_time is perf_protocol.min_time
-    # profile.py imports the engine inside main() (see its docstring).
-    assert _imports_min_time(REPO / "tools" / "profile.py")
+    assert key_profile.min_time is perf_protocol.min_time
     for path in [REPO / "bench.py", *sorted((REPO / "tools").glob("*.py"))]:
         if path.name == "perf_protocol.py":
             continue

@@ -10,18 +10,12 @@ with the bench's noop-sink methodology and reports:
   name, task count, executor run/CPU time, input and shuffle bytes.
 
 Usage:
-    python tools/profile.py [-n RUNS] [key ...]
+    python tools/key_profile.py [-n RUNS] [key ...]
 
 Writes JSON to stdout (one object per key) so runs are diffable. The
-session mirrors bench.py (local[$SPARK_GRAFT_CPUS], shuffle=cpus) except
-the UI is enabled for the REST scrape — timings here guide optimization;
-the bench remains the decision metric.
-
-Every tool run as a script puts this directory first on ``sys.path``, so
-this file also answers the stdlib's ``import profile`` that pyspark makes
-through cProfile. Imported under that name, it hands the import the
-stdlib module instead; module scope imports nothing heavy, and the
-engine is imported inside ``main``.
+session is ``build_session``'s default shape (bench.py's, unless
+SPARK_MASTER is set) except the UI is enabled for the REST scrape —
+timings here guide optimization; the bench remains the decision metric.
 """
 
 from __future__ import annotations
@@ -36,16 +30,10 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-if __name__ == "profile":  # shadowing the stdlib module: load that one
-    import importlib.machinery
-    import importlib.util
-
-    _spec = importlib.machinery.PathFinder.find_spec(
-        "profile",
-        [p for p in sys.path if Path(p or ".").resolve() != REPO / "tools"],
-    )
-    sys.modules["profile"] = importlib.util.module_from_spec(_spec)
-    _spec.loader.exec_module(sys.modules["profile"])
+from bench import BENCH_QUERIES  # noqa: E402
+from sparkstreamingrealtimedatawithkafka_spark.plans import REGISTRY  # noqa: E402
+from sparkstreamingrealtimedatawithkafka_spark.session import build_session  # noqa: E402
+from tools.perf_protocol import min_time, noop  # noqa: E402
 
 
 def rest(app_url: str, path: str):
@@ -77,11 +65,6 @@ def stage_rows(app_url: str, jobs: list[dict]) -> list[dict]:
 
 
 def main() -> None:
-    from bench import BENCH_QUERIES
-    from sparkstreamingrealtimedatawithkafka_spark.plans import REGISTRY
-    from sparkstreamingrealtimedatawithkafka_spark.session import build_session
-    from tools.perf_protocol import min_time, noop
-
     args = sys.argv[1:]
     runs = 2
     if args and args[0] == "-n":
@@ -90,12 +73,8 @@ def main() -> None:
     keys = args or list(BENCH_QUERIES)
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = build_session(
-        app_name="ssk-profile",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-        extra={"spark.ui.enabled": "true"},
+        app_name="ssk-profile", extra={"spark.ui.enabled": "true"}
     )
     ui = spark.sparkContext.uiWebUrl
     app_id = spark.sparkContext.applicationId

@@ -1,13 +1,14 @@
 """Reproducible end-to-end perf protocol — the judge's measurement, as a
 committed tool, so perf claims are made against the same procedure that
-audits them. ``bench.py``, ``scale_check.py`` and ``profile.py`` time
+audits them. ``bench.py``, ``scale_check.py`` and ``key_profile.py`` time
 through this module's ``min_time`` and its one orphan-RDD cleaner.
 
 Protocol (per query name given on the command line):
   1. FRESH SparkSession (this process — run the script once per claim;
-     do not reuse a long-lived REPL session with prior heap debt) on
-     local[$SPARK_GRAFT_CPUS] (default 32), the bench's session shape,
-     plus any ``--conf k=v`` pairs;
+     do not reuse a long-lived REPL session with prior heap debt) in
+     ``build_session``'s default shape ($SPARK_MASTER, else
+     local[$SPARK_GRAFT_CPUS], default 32; with SPARK_MASTER unset, the
+     bench's session shape), plus any ``--conf k=v`` pairs;
   2. warmup: the standard bench warmup (q1 at the target sf boots
      codegen + the parquet reader; the sf0.001 UDF entry boots the
      Python worker pool) plus one throwaway run of the measured query
@@ -37,7 +38,6 @@ Prints one JSON line:
 from __future__ import annotations
 
 import json
-import os
 import sys
 import time
 from pathlib import Path
@@ -123,13 +123,7 @@ def main() -> int:
         print("usage: perf_protocol.py QUERY [QUERY...] [--sf-dir DIR] [--conf k=v ...]")
         return 2
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = build_session(
-        app_name="perf-protocol",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-        extra=confs,
-    )
+    spark = build_session(app_name="perf-protocol", extra=confs)
     noop(REGISTRY["q1_pricing_summary"].fn(spark, sf_dir))
     noop(REGISTRY["pipeline_parity_udf"].fn(spark, WARM_SF))
     probe = measure_probe(spark)
