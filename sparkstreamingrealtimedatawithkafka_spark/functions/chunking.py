@@ -8,16 +8,14 @@ fixed-size token windows, the canonical pre-training preprocessing step
 pins the engine's pattern for one.
 
 Scale shape: a UDTF is a per-row Python generator — fine for fan-out
-logic, but at 100 TB prefer the pure-expression twin below
-(``chunk_expr``: slice/transform over the token array, fully codegen'd,
-no Python workers) unless the chunking logic genuinely needs Python. The
-catalog entry runs the UDTF so the surface is exercised and checked.
+logic, but at 100 TB prefer pure column expressions (slice/transform over
+the token array, fully codegen'd, no Python workers) unless the chunking
+logic genuinely needs Python. The catalog entry runs the UDTF so the
+surface is exercised and checked.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql.functions import udtf
 
 
@@ -80,27 +78,3 @@ class LangPartitionSummary:
         if self._n:
             yield self._lang, self._n, self._first, self._last, self._tokens
 
-
-def chunk_expr(text: Column | str, chunk_tokens: int) -> Column:
-    """Pure-expression chunking twin: array<struct<chunk_idx,chunk,n_tokens>>.
-
-    Same semantics as ``ChunkText`` with zero Python workers — the 100 TB
-    hot-path variant (explode it for one row per chunk).
-    """
-    col = F.col(text) if isinstance(text, str) else text
-    toks = F.filter(F.split(F.coalesce(col, F.lit("")), " "), lambda t: t != F.lit(""))
-    n_chunks = F.ceil(F.size(toks) / F.lit(chunk_tokens)).cast("int")
-    chunks = F.transform(
-        F.sequence(F.lit(0), n_chunks - 1),
-        lambda i: F.struct(
-            i.cast("int").alias("chunk_idx"),
-            F.array_join(
-                F.slice(toks, i * chunk_tokens + 1, chunk_tokens), " "
-            ).alias("chunk"),
-            F.size(F.slice(toks, i * chunk_tokens + 1, chunk_tokens)).alias("n_tokens"),
-        ),
-    )
-    # sequence(0, -1) would generate a DESCENDING range; guard empty docs.
-    return F.when(n_chunks > 0, chunks).otherwise(
-        F.expr("array()").cast("array<struct<chunk_idx:int,chunk:string,n_tokens:int>>")
-    )

@@ -9,9 +9,9 @@ Everything here mirrors the reference's text path but Spark-first:
   extractor pluggable, with a deterministic dictionary extractor as the
   default so correctness is oracle-checkable; JVM-side column expressions are
   preferred wherever the semantics allow (no Python in the hot path).
-- Tokenization, shingles, fingerprints, quality stats and language-ID are
-  pure column expressions (whole-stage-codegen'd, no UDF), so Catalyst can
-  prune/pushdown around them and they scale linearly with no Python workers.
+- Tokenization, shingles and fingerprints are pure column expressions
+  (whole-stage-codegen'd, no UDF), so Catalyst can prune/pushdown around
+  them and they scale linearly with no Python workers.
 """
 
 from __future__ import annotations
@@ -87,34 +87,6 @@ def fingerprint(col: Column | str) -> Column:
     token reordering.
     """
     return F.md5(F.array_join(F.array_sort(F.array_distinct(tokenize(col))), " "))
-
-
-def token_count(col: Column | str) -> Column:
-    return F.size(tokenize(col))
-
-
-def stopword_ratio(col: Column | str) -> Column:
-    toks = tokenize(col)
-    stop = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS)))
-    return F.when(F.size(toks) > 0, stop.cast("double") / F.size(toks)).otherwise(F.lit(0.0))
-
-
-def avg_token_len(col: Column | str) -> Column:
-    toks = tokenize(col)
-    total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
-    return F.when(F.size(toks) > 0, total.cast("double") / F.size(toks)).otherwise(F.lit(0.0))
-
-
-def quality_score(col: Column | str) -> Column:
-    """Heuristic document quality in [0,1]: long enough, not stopword-heavy.
-
-    Deliberately integer/ratio-based so a SQL oracle can reproduce it
-    bit-for-bit (no transcendental functions).
-    """
-    toks = token_count(col)
-    length_part = F.least(toks.cast("double") / F.lit(50.0), F.lit(1.0))
-    stop_part = F.lit(1.0) - stopword_ratio(col)
-    return F.round((length_part + stop_part) / F.lit(2.0), 6)
 
 
 # ---------------------------------------------------------------------------

@@ -34,10 +34,6 @@ def norm(a: Column) -> Column:
     )
 
 
-def cosine_similarity(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
-
-
 def int8_codes_expr(dim: int) -> Column:
     """Per-dimension affine int8 quantization of column ``v`` given
     one-row-broadcast ``mins``/``maxs`` array columns: code d =

@@ -6,14 +6,14 @@ Ancestry: the reference deduplicates producer-side with an LRU set keyed on
 
 - ``exact_dedup`` — keep-first by key via Window ``row_number`` (one shuffle
   on the dedup key; no driver state, unlike the LRU).
-- ``minhash_signatures`` / ``lsh_candidate_pairs`` — near-dup detection at
-  scale: per-doc MinHash signature (pure column expressions over
-  ``xxhash64``), banded into LSH buckets, candidate pairs produced by a
-  *bucket equi-join* (shuffle on band hash — never the O(n²) cross join),
-  then verified with exact Jaccard on shingles.
-- ``simhash`` — 64-bit SimHash as a pure aggregate-expression fold; near
-  dups cluster by exact signature (or small Hamming distance via
-  ``bit_count(a ^ b)``).
+- ``minhash_signature_table`` / ``lsh_candidate_pairs`` — near-dup
+  detection at scale: per-doc MinHash signature (explode → MIN aggregates
+  over ``xxhash64``), banded into LSH buckets, candidate pairs generated
+  *within* each bucket (shuffle on band hash — never the O(n²) cross
+  join), then verified with exact Jaccard on shingles.
+- ``simhash_table`` / ``simhash_near_dup_pairs`` — 63-bit SimHash as an
+  explode → groupBy aggregation; near dups share a signature chunk and
+  sit within a small Hamming distance (``bit_count(a ^ b)``).
 
 All the hashing stays JVM-side (``xxhash64`` is a Catalyst expression), so
 these run inside whole-stage codegen with zero Python workers.
@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
+
+from sparkstreamingrealtimedatawithkafka_spark.functions.pairs import array_pairs
 
 
 def exact_dedup(df: DataFrame, keys: list[str], order_by: list[Column]) -> DataFrame:
@@ -137,20 +139,6 @@ def minhash_signature_table(
     return mins.selectExpr("id", f"array({cols}) AS sig")
 
 
-def minhash_signatures(tokens: Column, num_hashes: int = 32) -> Column:
-    """MinHash signature (array<bigint>, length ``num_hashes``) of a token
-    set, as one column expression: for seed s, min over tokens of
-    ``xxhash64(token, s)``. Empty token sets get MaxValue sentinels."""
-    distinct = F.array_distinct(tokens)
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda s: F.coalesce(
-            F.array_min(F.transform(distinct, lambda t: F.xxhash64(t, s))),
-            F.lit(2**63 - 1),
-        ),
-    )
-
-
 def minhash_band_table(
     df: DataFrame,
     id_col: str,
@@ -256,39 +244,46 @@ def bucket_pairs(
         .agg(F.array_sort(F.collect_list("id")).alias("ids"))
         .filter(F.size("ids") >= 2)
     )
-    if max_bucket is not None:
-        oversize = F.size("ids") > max_bucket
-        metrics = (
-            F.sum(oversize.cast("long")).alias("buckets_dropped"),
-            F.coalesce(
-                F.sum(F.when(oversize, F.size("ids")).otherwise(0)).cast("long"),
-                F.lit(0).cast("long"),
-            ).alias("ids_in_dropped_buckets"),
-            F.max(F.size("ids")).alias("max_bucket_size"),
-        )
-        if drop_observation is not None:
-            buckets = buckets.observe(drop_observation, *metrics)
-        else:
-            # Deterministic name: a per-call uuid would make every
-            # invocation a *different* plan, defeating codegen/plan caching
-            # (measured ~1.5s/run regression on the full-dedup pipeline).
-            name = f"lsh_bucket_drops_{'_'.join(bucket_cols)}_{max_bucket}"
-            buckets = buckets.observe(name, *metrics)
-        buckets = buckets.filter(~oversize)
+    buckets = _drop_oversize(
+        buckets, "ids", max_bucket, drop_observation,
+        f"lsh_bucket_drops_{'_'.join(bucket_cols)}_{max_bucket}",
+    )
+    return _distinct_pairs(buckets, "ids", lambda m: m)
+
+
+def _drop_oversize(buckets, members, max_bucket, drop_observation, name):
+    """The ``max_bucket`` runaway guard shared by the LSH pair generators:
+    drop buckets whose ``members`` array is longer than the cap, and
+    observe what was dropped (``buckets_dropped`` /
+    ``ids_in_dropped_buckets`` / ``max_bucket_size``) into
+    ``drop_observation`` or, without one, under ``name``. ``name`` must
+    be deterministic: a per-call uuid would make every invocation a
+    *different* plan, defeating codegen/plan caching (measured ~1.5s/run
+    regression on the full-dedup pipeline). No cap, no change."""
+    if max_bucket is None:
+        return buckets
+    oversize = F.size(members) > max_bucket
+    metrics = (
+        F.sum(oversize.cast("long")).alias("buckets_dropped"),
+        F.coalesce(
+            F.sum(F.when(oversize, F.size(members)).otherwise(0)).cast("long"),
+            F.lit(0).cast("long"),
+        ).alias("ids_in_dropped_buckets"),
+        F.max(F.size(members)).alias("max_bucket_size"),
+    )
+    observation = drop_observation if drop_observation is not None else name
+    return buckets.observe(observation, *metrics).filter(~oversize)
+
+
+def _distinct_pairs(buckets, members, id_of, keep=None):
+    """Distinct (id_a, id_b) pairs from each bucket's sorted ``members``
+    array; ``id_of`` maps a member to its id, ``keep`` (optional) sheds
+    pairs inside the generating expression (see ``array_pairs``)."""
+    pairs = array_pairs(
+        members, lambda x, y: F.struct(id_of(x).alias("id_a"), id_of(y).alias("id_b")), keep
+    )
     return (
-        buckets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        "ids",
-                        lambda x, i: F.transform(
-                            F.slice(F.col("ids"), i + F.lit(2), F.size("ids")),
-                            lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
+        buckets.select(F.explode(pairs).alias("p"))
         .select("p.id_a", "p.id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
@@ -322,30 +317,9 @@ def verify_jaccard(
     probe, and unlike this shape it moves token arrays through an exchange.
 
     Returns (id_a, id_b, jaccard >= threshold)."""
-    p = pairs.localCheckpoint()
-    ids = (
-        p.select(F.col("id_a").alias("id"))
-        .union(p.select(F.col("id_b").alias("id")))
-        .distinct()
-    )
-    toks = (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.array_distinct(F.col(tokens_col)).alias("tok"),
-        )
-        .join(ids, "id", "left_semi")
-        .localCheckpoint()
-    )
-    cand = (
-        p.join(toks.select(F.col("id").alias("id_a"), F.col("tok").alias("tok_a")), "id_a")
-        .join(toks.select(F.col("id").alias("id_b"), F.col("tok").alias("tok_b")), "id_b")
-    )
-    inter = F.size(F.array_intersect(F.col("tok_a"), F.col("tok_b")))
-    union = F.size(F.col("tok_a")) + F.size(F.col("tok_b")) - inter
-    return (
-        cand.withColumn("jaccard", inter.cast("double") / union)
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "jaccard")
+    return _verify_pairs(
+        pairs, df, id_col, tokens_col, "jaccard", jaccard_threshold,
+        lambda inter, na, nb: inter.cast("double") / (na + nb - inter),
     )
 
 
@@ -364,6 +338,18 @@ def verify_containment(
     pairs, semi-pruned corpus scan, materialized once, two block probes.
 
     Returns (id_a, id_b, containment >= threshold)."""
+    return _verify_pairs(
+        pairs, df, id_col, tokens_col, "containment", containment_threshold,
+        lambda inter, na, nb: inter.cast("double") / F.least(na, nb),
+    )
+
+
+def _verify_pairs(pairs, df, id_col, tokens_col, score_col, threshold, score):
+    """The one-scan verification shape of ``verify_jaccard`` /
+    ``verify_containment``: checkpoint the pairs, semi-join-prune the
+    corpus to their members, materialize that once, probe it per side.
+    ``score(|A∩B|, |A|, |B|)`` over distinct tokens is kept as
+    ``score_col`` where it is >= ``threshold``."""
     p = pairs.localCheckpoint()
     ids = (
         p.select(F.col("id_a").alias("id"))
@@ -383,11 +369,10 @@ def verify_containment(
         .join(toks.select(F.col("id").alias("id_b"), F.col("tok").alias("tok_b")), "id_b")
     )
     inter = F.size(F.array_intersect(F.col("tok_a"), F.col("tok_b")))
-    denom = F.least(F.size("tok_a"), F.size("tok_b"))
     return (
-        cand.withColumn("containment", inter.cast("double") / denom)
-        .filter(F.col("containment") >= containment_threshold)
-        .select("id_a", "id_b", "containment")
+        cand.withColumn(score_col, score(inter, F.size("tok_a"), F.size("tok_b")))
+        .filter(F.col(score_col) >= threshold)
+        .select("id_a", "id_b", score_col)
     )
 
 
@@ -444,44 +429,12 @@ def incremental_lsh_pairs(
         .agg(F.array_sort(F.collect_list(F.struct("id", "is_d"))).alias("ms"))
         .filter((F.size("ms") >= 2) & F.exists("ms", lambda m: m["is_d"]))
     )
-    if max_bucket is not None:
-        oversize = F.size("ms") > max_bucket
-        metrics = (
-            F.sum(oversize.cast("long")).alias("buckets_dropped"),
-            F.coalesce(
-                F.sum(F.when(oversize, F.size("ms")).otherwise(0)).cast("long"),
-                F.lit(0).cast("long"),
-            ).alias("ids_in_dropped_buckets"),
-            F.max(F.size("ms")).alias("max_bucket_size"),
-        )
-        if drop_observation is not None:
-            buckets = buckets.observe(drop_observation, *metrics)
-        else:
-            buckets = buckets.observe(
-                f"incremental_lsh_bucket_drops_{max_bucket}", *metrics
-            )
-        buckets = buckets.filter(~oversize)
-    cand = (
-        buckets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        "ms",
-                        lambda x, i: F.transform(
-                            F.filter(
-                                F.slice(F.col("ms"), i + F.lit(2), F.size("ms")),
-                                lambda y: x["is_d"] | y["is_d"],
-                            ),
-                            lambda y: F.struct(
-                                x["id"].alias("id_a"), y["id"].alias("id_b")
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.id_a", "p.id_b")
-        .dropDuplicates(["id_a", "id_b"])
+    buckets = _drop_oversize(
+        buckets, "ms", max_bucket, drop_observation,
+        f"incremental_lsh_bucket_drops_{max_bucket}",
+    )
+    cand = _distinct_pairs(
+        buckets, "ms", lambda m: m["id"], keep=lambda x, y: x["is_d"] | y["is_d"]
     )
     return verify_jaccard(cand, all_docs, id_col, tokens_col, jaccard_threshold)
 
@@ -555,30 +508,11 @@ def simhash_near_dup_pairs(
     # Filter BEFORE building pair structs: the hamming test is two long
     # ops per candidate, so shed pairs never pay the struct allocation
     # (the k^2/2 expansion is the bucket's dominant cost).
-    close = (
-        buckets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        "ms",
-                        lambda x, i: F.transform(
-                            F.filter(
-                                F.slice(F.col("ms"), i + F.lit(2), F.size("ms")),
-                                lambda y: F.bit_count(
-                                    x["sig"].bitwiseXOR(y["sig"])
-                                )
-                                <= F.lit(hamming_max),
-                            ),
-                            lambda y: F.struct(
-                                x["id"].alias("id_a"), y["id"].alias("id_b")
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.id_a", "p.id_b")
-        .dropDuplicates(["id_a", "id_b"])
+    close = _distinct_pairs(
+        buckets,
+        "ms",
+        lambda m: m["id"],
+        keep=lambda x, y: F.bit_count(x["sig"].bitwiseXOR(y["sig"])) <= F.lit(hamming_max),
     )
     return verify_jaccard(close, toks, "id", "tok", jaccard_threshold)
 
@@ -617,10 +551,8 @@ def two_stage_near_dup_pairs(
     is the collapsed-representative table — the exact artifact a
     production pipeline persists between the stages anyway.
     """
-    w = W.partitionBy(fingerprint_col).orderBy(id_col)
     reps = (
-        df.withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") == 1)
+        exact_dedup(df, [fingerprint_col], [F.col(id_col)])
         .select(id_col, tokens_col)
         .localCheckpoint()
     )
@@ -635,35 +567,3 @@ def two_stage_near_dup_pairs(
         drop_observation=drop_observation,
     )
 
-
-def simhash(tokens: Column) -> Column:
-    """63-bit SimHash of a token multiset as a pure expression fold.
-
-    Per token hash h, each bit position votes +1/-1; the sign vector packs
-    back into one non-negative bigint (63 bits — keeps the horner-scheme
-    packing overflow-free under ANSI mode). Identical near-dup docs collide
-    exactly; close docs differ in few bits (``bit_count(a ^ b)``).
-    """
-    bits = F.aggregate(
-        tokens,
-        F.array_repeat(F.lit(0), 63),
-        lambda acc, tok: F.zip_with(
-            acc,
-            F.transform(
-                F.sequence(F.lit(0), F.lit(62)),
-                lambda i: F.when(F.bit_get(F.xxhash64(tok), i) == 1, F.lit(1)).otherwise(
-                    F.lit(-1)
-                ),
-            ),
-            lambda x, y: x + y,
-        ),
-    )
-    # Horner packing, MSB first: acc = acc*2 + sign_bit.
-    return F.aggregate(
-        F.sequence(F.lit(62), F.lit(0), F.lit(-1)),
-        F.lit(0).cast("long"),
-        lambda acc, i: acc * 2
-        + F.when(F.element_at(bits, (i + 1).cast("int")) > 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        ),
-    )

@@ -36,7 +36,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from sparkstreamingrealtimedatawithkafka_spark.functions import text as TX
-from sparkstreamingrealtimedatawithkafka_spark.plans._util import cents, sql_cents, t
+from sparkstreamingrealtimedatawithkafka_spark.plans._util import (
+    cents,
+    copurchase_pairs,
+    sql_cents,
+    t,
+)
 from sparkstreamingrealtimedatawithkafka_spark.plans.registry import register
 from sparkstreamingrealtimedatawithkafka_spark.plans.text_llm import _TOKS, _STOP_SQL
 
@@ -484,68 +489,11 @@ def privacy_dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def copurchase_edges(li) -> "DataFrame":
-    """Undirected co-purchase edge list with a RELATIVE support threshold:
-    parts count as connected when they co-occur in at least
-    max(2, 13ppm of distinct orders) baskets. An ABSOLUTE threshold
-    (n >= 2) stops filtering the moment order volume grows — measured at
-    10x sf0.1 data the n>=2 graph densifies 335x (7.1k -> 2.39M directed
-    edges, max degree 6 -> 222, sum-of-deg-squared 30,000x) and the
-    wedge join downstream went 86x for 10x input. Support defined as a
-    FRACTION of baskets keeps edge semantics ("frequently co-purchased")
-    and graph sparsity scale-stable; at every fixture SF the expression
-    still evaluates to 2, so oracles are unchanged. The threshold rides
-    a one-row broadcast — never a driver-side collect. Edge list is
-    localCheckpointed by CALLERS that fan out over it.
-
-    Plan shape (r14): pairs come from a per-basket in-array expansion —
-    groupBy(order) collect_set, then ordered pairs off the sorted array
-    (the ``bucket_pairs`` idiom, the same shape
-    ``graph_pagerank_copurchase`` always used) — TWO exchanges total
-    (order key, then pair key) instead of the prior distinct + self-join
-    + pair aggregate (three exchanges plus an equi-join whose both sides
-    replayed the distinct). The in-basket k²/2 expansion is bounded by
-    basket width exactly like the old join fan-out (same pair rows), and
-    dropping the join removed its sort + exchange — interleaved A/B at
-    sf0.1 below. Output is bit-identical: same pairs, same counts, same
-    threshold.
-
-    The basket aggregate is LOW-REDUCTION (collect_set keeps every
-    element), so on a narrow scan its partial phase is the whole job on
-    one core — spread_narrow_scan moves it behind the order-key exchange
-    the aggregate needed anyway (min-of-10 interleaved A/B at sf0.1:
-    edge materialization 2.89 -> 2.01 s, identical rows; no-op at scale
-    by the file-metadata gate)."""
-    from sparkstreamingrealtimedatawithkafka_spark.operators.skew import (
-        spread_narrow_scan,
-    )
-
-    baskets = (
-        spread_narrow_scan(li.select("l_orderkey", "l_partkey"), "l_orderkey")
-        .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("parts"))
-    )
-    sup = baskets.agg(
-        F.greatest(F.lit(2), F.expr("(count(1) * 13) div 1000000")).alias("min_n")
-    )
-    p = (
-        baskets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        "parts",
-                        lambda x, i: F.transform(
-                            F.slice(F.col("parts"), i + F.lit(2), F.size("parts")),
-                            lambda y: F.struct(x.alias("pa"), y.alias("pb")),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .groupBy("p.pa", "p.pb")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .crossJoin(F.broadcast(sup))
-        .filter(F.col("n") >= F.col("min_n"))
-    )
+    """Undirected co-purchase edge list: ``copurchase_pairs`` (parts
+    co-occurring in at least max(2, 13ppm of distinct orders) baskets)
+    in both directions. Edge list is localCheckpointed by CALLERS that
+    fan out over it."""
+    p = copurchase_pairs(li)
     return p.select(F.col("pa").alias("src"), F.col("pb").alias("dst")).unionAll(
         p.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
     )

@@ -27,7 +27,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from sparkstreamingrealtimedatawithkafka_spark.plans._util import cents, sql_cents, t
+from sparkstreamingrealtimedatawithkafka_spark.functions.pairs import array_pairs
+from sparkstreamingrealtimedatawithkafka_spark.plans._util import (
+    cents,
+    copurchase_pairs,
+    sql_cents,
+    t,
+)
 from sparkstreamingrealtimedatawithkafka_spark.plans.registry import register
 
 _Q1_ORACLE = f"""
@@ -3068,22 +3074,11 @@ def basket_affinity_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.array_sort(F.collect_set("l_partkey")).alias("parts"))
         .localCheckpoint()
     )
+    pairs = array_pairs(
+        "parts", lambda x, y: F.struct(x.alias("part_a"), y.alias("part_b"))
+    )
     pair_n = (
-        baskets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        "parts",
-                        lambda x, i: F.transform(
-                            F.slice(F.col("parts"), i + F.lit(2), F.size("parts")),
-                            lambda y: F.struct(
-                                x.alias("part_a"), y.alias("part_b")
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
+        baskets.select(F.explode(pairs).alias("p"))
         .groupBy(F.col("p.part_a").alias("part_a"), F.col("p.part_b").alias("part_b"))
         .agg(F.count(F.lit(1)).alias("n_ab"))
     )
@@ -3348,20 +3343,6 @@ def scd2_point_in_time_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _basket_min_support(baskets):
-    """Relative co-purchase support: max(2, 13ppm of baskets) as a one-row
-    broadcast. Absolute n>=2 stops filtering when order volume grows —
-    measured at 10x sf0.1 the n>=2 graph densified 335x (max degree
-    6 -> 222) and downstream wedge joins went 86x for 10x input; a
-    support FRACTION keeps "frequently co-purchased" meaningful and the
-    graph sparsity scale-stable. Evaluates to 2 at every fixture SF
-    (oracle results unchanged). Same rule as plans/ml.py:
-    copurchase_edges."""
-    return baskets.agg(
-        F.greatest(F.lit(2), F.expr("(count(1) * 13) div 1000000")).alias("min_n")
-    )
-
-
 def _pagerank_oracle(iters: int = 5) -> str:
     head = """
 WITH b AS (
@@ -3414,39 +3395,7 @@ def graph_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     2.92 -> 2.34 s at sf0.1)."""
     from sparkstreamingrealtimedatawithkafka_spark.operators.graph import pagerank_int
 
-    from sparkstreamingrealtimedatawithkafka_spark.operators.skew import (
-        spread_narrow_scan,
-    )
-
-    li = t(spark, sf_dir, "lineitem")
-    # collect_set is low-reduction: on a narrow scan its partial phase is
-    # the whole job on one core; spread by the grouping key (the exchange
-    # the aggregate needed anyway — see spread_narrow_scan, no-op at scale)
-    baskets = (
-        spread_narrow_scan(li.select("l_orderkey", "l_partkey"), "l_orderkey")
-        .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("parts"))
-    )
-    pairs = (
-        baskets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        "parts",
-                        lambda x, i: F.transform(
-                            F.slice(F.col("parts"), i + F.lit(2), F.size("parts")),
-                            lambda y: F.struct(x.alias("pa"), y.alias("pb")),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .groupBy("p.pa", "p.pb")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .crossJoin(F.broadcast(_basket_min_support(baskets)))
-        .filter(F.col("n") >= F.col("min_n"))
-        .select("pa", "pb")
-    )
+    pairs = copurchase_pairs(t(spark, sf_dir, "lineitem"))
     return pagerank_int(pairs, "pa", "pb", iterations=5)
 
 
@@ -3719,43 +3668,10 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     found exactly once (w1.v < w2.v dedups wedge symmetry), then exploded
     to its three member nodes for the per-node count: one final shuffle
     on the node key."""
-    from sparkstreamingrealtimedatawithkafka_spark.operators.skew import (
-        spread_narrow_scan,
-    )
-
-    li = t(spark, sf_dir, "lineitem")
-    # collect_set is low-reduction: on a narrow scan its partial phase is
-    # the whole job on one core; spread by the grouping key (the exchange
-    # the aggregate needed anyway — see spread_narrow_scan, no-op at scale)
-    baskets = (
-        spread_narrow_scan(li.select("l_orderkey", "l_partkey"), "l_orderkey")
-        .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("parts"))
-    )
-    pairs = (
-        baskets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        "parts",
-                        lambda x, i: F.transform(
-                            F.slice(F.col("parts"), i + F.lit(2), F.size("parts")),
-                            lambda y: F.struct(x.alias("pa"), y.alias("pb")),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .groupBy("p.pa", "p.pb")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .crossJoin(F.broadcast(_basket_min_support(baskets)))
-        .filter(F.col("n") >= F.col("min_n"))
-        .select("pa", "pb")
-        # pairs feeds the degree table AND both sides of the orientation
-        # join; without a lineage cut each branch re-runs the basket
-        # expansion (the self-referencing-plan recompute trap).
-        .localCheckpoint()
-    )
+    # pairs feeds the degree table AND both sides of the orientation
+    # join; without a lineage cut each branch re-runs the basket
+    # expansion (the self-referencing-plan recompute trap).
+    pairs = copurchase_pairs(t(spark, sf_dir, "lineitem")).localCheckpoint()
     deg = (
         pairs.select(F.col("pa").alias("node"))
         .unionAll(pairs.select(F.col("pb").alias("node")))
@@ -3928,20 +3844,9 @@ def rec_item_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.array_sort(F.collect_set("l_partkey")).alias("parts"))
         .localCheckpoint()
     )
+    pairs = array_pairs("parts", lambda x, y: F.struct(x.alias("pa"), y.alias("pb")))
     co = (
-        baskets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        "parts",
-                        lambda x, i: F.transform(
-                            F.slice(F.col("parts"), i + F.lit(2), F.size("parts")),
-                            lambda y: F.struct(x.alias("pa"), y.alias("pb")),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
+        baskets.select(F.explode(pairs).alias("p"))
         .groupBy("p.pa", "p.pb")
         .agg(F.count(F.lit(1)).alias("c_ab"))
         .filter(F.col("c_ab") >= 2)

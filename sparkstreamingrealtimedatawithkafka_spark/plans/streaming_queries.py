@@ -25,6 +25,7 @@ from sparkstreamingrealtimedatawithkafka_spark.streaming.pipeline import (
     run_to_memory,
     windowed_event_counts,
 )
+from sparkstreamingrealtimedatawithkafka_spark.streaming.incremental import write_batch
 from sparkstreamingrealtimedatawithkafka_spark.streaming.stateful import user_running_stats
 
 US_PER_DAY = 86_400_000_000
@@ -934,24 +935,12 @@ def streaming_multi_sink_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def fanout(batch_df, batch_id: int) -> None:
-        tagged = batch_df.withColumn("batch_id", F.lit(batch_id))
-        (
-            tagged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{work}/raw")
+        write_batch(batch_df, batch_id, f"{work}/raw")
+        agg = batch_df.groupBy("event_type").agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum("cents").alias("sum_cents"),
         )
-        (
-            tagged.groupBy("batch_id", "event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.sum("cents").alias("sum_cents"),
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{work}/agg")
-        )
+        write_batch(agg, batch_id, f"{work}/agg")
 
     q = (
         raw.writeStream.foreachBatch(fanout)
@@ -1064,17 +1053,9 @@ def streaming_dead_letter_queue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def triage(batch_df, batch_id: int) -> None:
-        tagged = batch_df.withColumn("reason", reason).withColumn(
-            "batch_id", F.lit(batch_id)
-        )
+        tagged = batch_df.withColumn("reason", reason)
         for sink, pred in (("good", "reason = 'ok'"), ("dlq", "reason <> 'ok'")):
-            (
-                tagged.filter(pred)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(f"{work}/{sink}")
-            )
+            write_batch(tagged.filter(pred), batch_id, f"{work}/{sink}")
 
     q = (
         raw.writeStream.foreachBatch(triage)

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from sparkstreamingrealtimedatawithkafka_spark.functions import text as TX
+from sparkstreamingrealtimedatawithkafka_spark.functions.pairs import array_pairs
 from sparkstreamingrealtimedatawithkafka_spark.functions.multimodal import (
     decode_audio,
     decode_binary_features,
@@ -3343,15 +3344,7 @@ def text_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     as TakeOrderedAndProject."""
     docs = t(spark, sf_dir, "documents")
     sd = F.array_sort(F.array_distinct(TX.tokenize("text")))
-    pairs_col = F.flatten(
-        F.transform(
-            sd,
-            lambda x, i: F.transform(
-                F.slice(sd, i + F.lit(2), F.size(sd)),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
+    pairs_col = array_pairs(sd, lambda x, y: F.struct(x.alias("a"), y.alias("b")))
     pairs = docs.select(F.explode(pairs_col).alias("p")).select("p.a", "p.b")
     c2 = pairs.groupBy("a", "b").agg(F.count(F.lit(1)).alias("n_ab"))
     c1 = (

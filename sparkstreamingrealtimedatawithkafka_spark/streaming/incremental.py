@@ -47,6 +47,20 @@ from sparkstreamingrealtimedatawithkafka_spark.operators.dedup import (
 )
 
 
+def write_batch(df: DataFrame, batch_id: int, path: str) -> None:
+    """Write one micro-batch's output under ``path/batch_id=<id>`` with
+    dynamic partition overwrite: a replayed batch REPLACES its own
+    partition instead of appending a duplicate, and leaves every other
+    batch's partition untouched."""
+    (
+        df.withColumn("batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(path)
+    )
+
+
 def dedup_batch_processor(
     spark: SparkSession,
     work_dir: str,
@@ -83,17 +97,8 @@ def dedup_batch_processor(
         # 52 -> fewer jobs / -3s warm at sf0.01,
         # tools/profile_stream_r15_before.json vs _after.json).
         # Explicit read schemas skip parquet footer inference per batch.
-        # Idempotent writes: all three tables are partitioned by batch_id
-        # and written with dynamic partition overwrite, so replay REPLACES
-        # this batch's contribution rather than re-appending it.
         tok_schema = StructType(list(batch.schema.fields) + [part_field])
-        (
-            batch.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(toks_dir)
-        )
+        write_batch(batch, batch_id, toks_dir)
         cur_toks = (
             spark.read.schema(tok_schema)
             .parquet(toks_dir)
@@ -102,13 +107,7 @@ def dedup_batch_processor(
         )
         bt = minhash_band_table(cur_toks, "id", "tok", num_hashes, bands)
         band_schema = StructType(list(bt.schema.fields) + [part_field])
-        (
-            bt.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(bands_dir)
-        )
+        write_batch(bt, batch_id, bands_dir)
         # Join the batch's bands against index partitions <= current only.
         # (bands <= k) |><| (bands == k) is row-identical to the r1-r14
         # (prior < k UNION batch) |><| batch join, and the <= bound is what
@@ -147,13 +146,7 @@ def dedup_batch_processor(
             .select("id", "tok")
         )
         pairs = verify_jaccard(cand, all_toks, "id", "tok", jaccard_threshold)
-        (
-            pairs.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(pairs_dir)
-        )
+        write_batch(pairs, batch_id, pairs_dir)
 
     return process
 
@@ -234,13 +227,7 @@ def topk_batch_processor(
             .filter(F.col("rank") <= k)
             .select("query_id", "neighbor_id", "sim")
         )
-        (
-            top.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(state_dir)
-        )
+        write_batch(top, batch_id, state_dir)
 
     return process
 

@@ -106,6 +106,41 @@ def test_max_bucket_cap_engages_with_observed_drops(spark):
     assert obs.get["max_bucket_size"] == 40
 
 
+def test_max_bucket_cap_observed_alike_by_batch_and_incremental_pairs(spark):
+    """``bucket_pairs`` and ``incremental_lsh_pairs`` share one cap: on a
+    corpus with exactly one oversize bucket (one band, 40 identical docs)
+    both drop it, report the same three metrics, and keep the healthy
+    pair."""
+    from pyspark.sql import Observation
+
+    from sparkstreamingrealtimedatawithkafka_spark.operators.dedup import (
+        bucket_pairs,
+        incremental_lsh_pairs,
+        minhash_band_table,
+    )
+
+    monster = [(i, "same same text here") for i in range(1, 41)]
+    normal = [(100, "quick brown fox jumps"), (101, "quick brown fox jumps")]
+    docs = _docs(spark, monster + normal)
+
+    batch_obs = Observation("cap_batch")
+    banded = minhash_band_table(docs, "id", "toks", num_hashes=4, bands=1)
+    batch = bucket_pairs(
+        banded, ["band", "bhash"], max_bucket=10, drop_observation=batch_obs
+    ).collect()
+    incr_obs = Observation("cap_incremental")
+    incr = incremental_lsh_pairs(
+        docs, F.col("id") % 2 == 1, "id", "toks", num_hashes=4, bands=1,
+        max_bucket=10, drop_observation=incr_obs,
+    ).collect()
+
+    assert {(r["id_a"], r["id_b"]) for r in batch} == {(100, 101)}
+    assert {(r["id_a"], r["id_b"]) for r in incr} == {(100, 101)}
+    want = {"buckets_dropped": 1, "ids_in_dropped_buckets": 40, "max_bucket_size": 40}
+    assert {k: batch_obs.get[k] for k in want} == want
+    assert {k: incr_obs.get[k] for k in want} == want
+
+
 def test_max_bucket_cap_inert_on_healthy_corpus(spark):
     """With buckets under the cap, results are identical to the exact
     (uncapped) path and the observation reports zero drops."""
