@@ -35,6 +35,28 @@ total. It is a static conf: it must be on the builder before
 ``getOrCreate()`` (``spark.conf.set`` rejects it), and because the cache is
 JVM-wide and sized when code is first generated, a session rebuilt in the
 same JVM keeps the first size.
+
+Python worker daemon: every task a Python worker runs calls
+``importlib.invalidate_caches()`` (pyspark's ``setup_spark_files``), so
+that files shipped since the last task are found. On CPython 3.10-3.12
+that makes every ``zipimporter`` on the worker's ``sys.path`` re-read its
+archive's whole central directory there and then. Spark puts three
+archives ahead of everything else: ``pyspark.zip`` (1,328 entries), the
+py4j zip and the spark-core jar (5,359). A worker that has imported
+pyspark from the zip holds 16 zipimporters (the zip, 13 of its subpackage
+paths and the jar twice), so each task re-reads 26,672 entries. On a
+4-vCPU host that call took ~150 ms per task, Spark reported ~200 ms of
+"time to initialize Python workers" per task, and an identity pandas UDF
+over 1,000 rows took 269 ms against 61 ms for the plan without it.
+CPython 3.13 invalidates lazily: the directory is dropped and re-read at
+the next lookup through its importer. Below 3.13 the session runs
+``worker_daemon``, Spark's daemon with that behaviour backported, as
+``spark.python.daemon.module`` (with it, the call took ~1 ms). That is the
+only supported place for the fix: ``spark.python.worker.module`` accepts
+only ``pyspark*`` modules, ``PYTHONPATH`` cannot move Spark's archives
+behind site-packages, and a no-op ``invalidate_caches`` would stop workers
+from seeing archives that change between tasks. Executors must be able to
+import the package to start the daemon (see DEPLOY.md).
 """
 
 from __future__ import annotations
@@ -44,6 +66,8 @@ from urllib.parse import urlparse
 
 from pyspark.sql import SparkSession
 
+from sparkstreamingrealtimedatawithkafka_spark import worker_daemon
+
 CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
 FS_CHECKPOINT_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
@@ -52,6 +76,8 @@ FS_CHECKPOINT_MANAGER = (
 
 CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
 CODEGEN_CACHE_ENTRIES = 2500
+
+PYTHON_DAEMON_CONF = "spark.python.daemon.module"
 
 
 def build_session(
@@ -97,6 +123,10 @@ def build_session(
         .config(CODEGEN_CACHE_CONF, str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
     )
+    if worker_daemon.EAGER_ZIP_INVALIDATION:
+        # Per-task zipimport re-reads in every Python worker; CPython 3.13
+        # fixed them itself (see the module docstring).
+        builder = builder.config(PYTHON_DAEMON_CONF, worker_daemon.__name__)
     for key, value in (extra or {}).items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
