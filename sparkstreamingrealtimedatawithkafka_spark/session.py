@@ -57,13 +57,50 @@ only ``pyspark*`` modules, ``PYTHONPATH`` cannot move Spark's archives
 behind site-packages, and a no-op ``invalidate_caches`` would stop workers
 from seeing archives that change between tasks. Executors must be able to
 import the package to start the daemon (see DEPLOY.md).
+
+Local file system: without the native Hadoop library,
+``RawLocalFileSystem.setPermission`` runs ``chmod`` in a child process,
+and Hadoop sets the mode of every file and directory it creates on
+``file:``; under ``ChecksumFileSystem`` each file's ``.crc`` is one more.
+A steady ``news_trickle`` trigger forked 22 of them (16 for the 4
+partitions' state deltas, 2 each for the offsets, commits and source
+logs, those 6 serially on the stream thread), at 4-6 ms each in a 1 GB
+JVM against 0.1-0.3 ms for ``Files.setPosixFilePermissions``; a 4-file
+parquet write forked 18. The session makes ``NioLocalFileSystem`` (from
+``jvm/nio-local-fs.jar``, built from the ``.java`` beside it) the
+``file:`` implementation; left alone, the hive-exec jar's
+``ProxyLocalFileSystem`` wins the scheme by service-loader order. It is
+Hadoop's ``LocalFileSystem``, checksums and all, with a raw layer that sets
+the same nine rwx bits through NIO, and takes Hadoop's own path when the
+native library is loaded, the mode has the sticky bit or the platform is
+not POSIX. The class must be on the driver's class path when the JVM
+starts, because spark-submit already resolves ``spark.jars`` through the
+``file:`` FS, and by the time a session is built ``file:`` is in Hadoop's
+JVM-wide FileSystem cache. So the session sets the FS only when it launches
+the driver JVM itself: it prepends the jar to ``spark.driver.extraClassPath``
+(behind it, the value from ``extra=`` or else ``spark-defaults.conf``, which
+a builder conf would otherwise replace). It leaves ``file:`` alone when
+``extra=`` or ``spark-defaults.conf`` name a ``file:`` FS, when
+``PYSPARK_SUBMIT_ARGS`` sets the FS, the driver class path or a properties
+file (they follow the builder's confs on spark-submit's command line), and
+in a JVM started elsewhere (``spark-submit app.py``, a pyspark shell, a
+notebook); there, ``--driver-class-path`` with the jar and ``--conf
+spark.hadoop.fs.file.impl=...`` turn it on (see DEPLOY.md). Whenever the FS is on, the session adds the jar with
+``addJar`` so executors load it; ``spark.jars`` is left to the caller. To
+run Hadoop's FS, pass ``extra={"spark.hadoop.fs.file.impl":
+"org.apache.hadoop.fs.LocalFileSystem"}``.
 """
 
 from __future__ import annotations
 
 import os
+import re
+import shlex
+from pathlib import Path
 from urllib.parse import urlparse
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 from sparkstreamingrealtimedatawithkafka_spark import worker_daemon
@@ -78,6 +115,44 @@ CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
 CODEGEN_CACHE_ENTRIES = 2500
 
 PYTHON_DAEMON_CONF = "spark.python.daemon.module"
+
+LOCAL_FS_CONF = "spark.hadoop.fs.file.impl"
+LOCAL_FS_CLASS = "sparkstreamingrealtimedatawithkafka_spark.jvm.NioLocalFileSystem"
+LOCAL_FS_JAR = Path(__file__).resolve().parent / "jvm" / "nio-local-fs.jar"
+DRIVER_CLASS_PATH_CONF = "spark.driver.extraClassPath"
+
+
+def _spark_defaults() -> dict[str, str]:
+    """``spark-defaults.conf`` as spark-submit finds it; a builder conf
+    replaces its value for the same key."""
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(_find_spark_home(), "conf")
+    path = Path(conf_dir, "spark-defaults.conf")
+    if not path.is_file():
+        return {}
+    lines = (line.strip() for line in path.read_text().splitlines())
+    pairs = (re.split(r"\s*[=:\s]\s*", line, maxsplit=1) for line in lines)
+    return {p[0]: p[1] if len(p) > 1 else "" for p in pairs if p[0] and not p[0].startswith(("#", "!"))}
+
+
+def _local_fs_confs(extra: dict[str, str]) -> dict[str, str]:
+    """The launch confs that make ``file:`` the package's FS, or none where
+    this call cannot put the jar on the driver's class path or the caller
+    chose the FS (see the module docstring)."""
+    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+        return {}
+    # Later on spark-submit's command line than the builder's confs, so they win.
+    submit = os.environ.get("PYSPARK_SUBMIT_ARGS", "")
+    names = {arg.split("=", 1)[0] for arg in shlex.split(submit)}
+    if names & {"--driver-class-path", "--properties-file", DRIVER_CLASS_PATH_CONF, LOCAL_FS_CONF}:
+        return {}
+    defaults = _spark_defaults()
+    if LOCAL_FS_CONF in extra or LOCAL_FS_CONF in defaults:
+        return {}
+    caller = extra.get(DRIVER_CLASS_PATH_CONF, defaults.get(DRIVER_CLASS_PATH_CONF))
+    return {
+        DRIVER_CLASS_PATH_CONF: os.pathsep.join(filter(None, [str(LOCAL_FS_JAR), caller])),
+        LOCAL_FS_CONF: LOCAL_FS_CLASS,
+    }
 
 
 def build_session(
@@ -127,9 +202,16 @@ def build_session(
         # Per-task zipimport re-reads in every Python worker; CPython 3.13
         # fixed them itself (see the module docstring).
         builder = builder.config(PYTHON_DAEMON_CONF, worker_daemon.__name__)
-    for key, value in (extra or {}).items():
+    # ``file:`` writes set permissions without forking ``chmod`` (see the
+    # module docstring); the class path already holds any caller entry.
+    extra = extra or {}
+    for key, value in {**extra, **_local_fs_confs(extra)}.items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
+    served = spark.sparkContext._jsc.sc().listJars().mkString(" ")
+    if spark.conf.get(LOCAL_FS_CONF, None) == LOCAL_FS_CLASS and LOCAL_FS_JAR.name not in served:
+        # Executors load the class from the jar the driver serves.
+        spark.sparkContext._jsc.addJar(str(LOCAL_FS_JAR))
     spark.sparkContext.setLogLevel("WARN")
     default_fs = spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS")
     if urlparse(default_fs).scheme == "file" and (

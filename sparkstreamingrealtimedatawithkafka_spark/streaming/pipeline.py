@@ -124,12 +124,18 @@ def entity_counts(text_df: DataFrame, use_udf: bool = False) -> DataFrame:
 def to_output_json(counts: DataFrame) -> DataFrame:
     """Output message shape (spark_entity_counter.py:142-144):
     one JSON string per entity with a processing-time stamp."""
+    # In a micro-batch ``current_timestamp()`` is the trigger's batch time,
+    # and codegen inlines that literal into the Java source: every trigger
+    # would compile new classes. A higher-order function is not code
+    # generated, so the identity ``transform`` keeps the value out of the
+    # source; the stamp, its type and its JSON format are unchanged.
+    stamp = F.transform(F.array(F.current_timestamp()), lambda ts: ts)[0]
     return counts.select(
         F.to_json(
             F.struct(
                 F.col("entity"),
                 F.col("cnt").alias("count"),
-                F.current_timestamp().alias("timestamp"),
+                stamp.alias("timestamp"),
             )
         ).alias("value")
     )
