@@ -5,12 +5,86 @@ needs CLUSTERS — near-duplication is transitive in practice (A~B, B~C ⇒
 keep one of {A,B,C}), so the pairs form a graph whose connected components
 are the duplicate groups. The canonical keep-document is then the min id
 per component, mirroring exact dedup's keep-first rule.
+
+Every operator here is a loop of DataFrame rounds; ``_iterate`` is the one
+place that decides when a round's lineage is cut and when the loop has
+reached its fixpoint.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+import operator
+from collections.abc import Callable
+from functools import partial
+
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+
+
+def _iterate(
+    step: Callable[[DataFrame | None], DataFrame],
+    state: DataFrame | None,
+    rounds: int | None,
+    max_rounds: int,
+    probe: tuple,
+    stop: Callable[[dict | None, dict], bool] = operator.eq,
+    every: int = 1,
+) -> DataFrame:
+    """Apply ``step`` round after round, starting from ``state``, and
+    return the last round's frame.
+
+    ``rounds=N`` is FIXED DEPTH: N steps, with INTERVAL lineage cuts — a
+    localCheckpoint every ``every`` rounds, never after the final round
+    (the consumer's own action executes the last segment). A demo-depth
+    run (LPA rounds=4) is then ONE unrolled Spark job instead of one
+    materialization job per round — isolated min-of-3 at sf0.1: 3.18 s ->
+    2.09 s, labels identical — while deep runs still cut the plan every
+    ``every`` rounds before planning time can compound.
+
+    ``rounds=None`` is CONVERGED mode: every round is materialized with
+    ``localCheckpoint``, which truncates the lineage (without it the plan
+    grows every round and planning time explodes long before data size
+    matters). ``probe = (name, *aggregates)`` is the O(1)-scalar fixpoint
+    check: single-row aggregates, attached with ``observe`` so they ride
+    the checkpoint's eager job — each round is ONE Spark job, not
+    checkpoint + a separate collect, and no self-join diff. Job-launch
+    overhead is the whole cost on small duplicate graphs (same-session
+    min-of-4 A/B of ``connected_components`` on the 188-pair sf0.1 graph:
+    0.57 s -> 0.43 s, identical labels), and the saving is per round. The
+    loop ends once ``stop(previous, current)`` holds for the probe's
+    metrics — by default, when they did not change — or after
+    ``max_rounds`` rounds, where hitting the cap means "take the current
+    assignment".
+    """
+    depth = max_rounds if rounds is None else rounds
+    if depth < 1:
+        raise ValueError(
+            f"an iterative graph operator runs at least one round; got "
+            f"rounds={rounds}, max_rounds={max_rounds}"
+        )
+    name, *metrics = probe
+    last = None
+    for done in range(1, depth + 1):
+        state = step(state)
+        if rounds is not None:
+            if done % every == 0 and done < rounds:
+                state = state.localCheckpoint()
+            continue
+        obs = Observation(name)
+        state = state.observe(obs, *metrics).localCheckpoint()
+        got = obs.get
+        if stop(last, got):
+            break
+        last = got
+    return state
+
+
+def _xor_hash(*cols: str) -> Column:
+    """BIT_XOR(xxhash64(cols)) as probe ``h``: over rows unique in
+    ``cols`` it changes whenever any row does (w.h.p.; no xor-cancellation
+    between equal rows), and xor can't hit ANSI mode's int64 SUM
+    overflow."""
+    return F.expr(f"bit_xor(xxhash64({', '.join(cols)}))").alias("h")
 
 
 def connected_components(
@@ -24,24 +98,13 @@ def connected_components(
     fold with min); iterations needed = graph diameter. Duplicate clusters
     have tiny diameters (near-dup graphs are dense blobs, not paths), so
     this converges in a handful of rounds; for adversarial long-path
-    graphs, the large-star/small-star contraction (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14) drops the
-    round count to ~log n and slots into the same loop shape.
+    graphs, the large-star/small-star contraction
+    (``connected_components_star``) drops the round count to ~log n.
 
-    Scale hygiene, both load-bearing at 100 TB:
-    - ``localCheckpoint`` per round truncates the lineage — without it the
-      plan doubles every iteration and planning time explodes long before
-      data size matters;
-    - convergence is detected by the invariant that the label SUM strictly
-      decreases until fixpoint (labels only ever move down), so the check
-      is a cheap single-row aggregate per round, not a self-join diff —
-      and the aggregate rides the checkpoint materialization itself via
-      ``observe`` (fires on localCheckpoint's eager job), so each round is
-      ONE Spark job, not checkpoint + a separate sum-collect. Job-launch
-      overhead is the whole cost on small duplicate graphs: same-session
-      min-of-4 A/B on the 188-pair sf0.1 graph, 0.57 s -> 0.43 s,
-      identical labels — and the saving is per ROUND, so it grows with
-      graph diameter.
+    Runs in ``_iterate``'s converged mode, capped at ``max_iter`` rounds.
+    The probe is the label SUM, which strictly decreases until fixpoint
+    (labels only ever move down), so "sum unchanged" means "labels
+    unchanged".
     """
     # Materialize the symmetric edge list ONCE. ``edges`` is typically the
     # output of a whole near-dup pipeline (LSH banding + verification);
@@ -56,43 +119,27 @@ def connected_components(
         .distinct()
         .localCheckpoint()
     )
+
     # labels carries its node column as "lnode" so the per-round join
     # against sym can't hit Spark's ambiguous-self-join check (labels
     # derives from sym, so both would otherwise own the same attribute).
-    # Round 1 is FUSED: with identity labels, label(nbr) == nbr, so the
-    # propagation join is the edge list itself — one aggregate computes
-    # label1(node) = min(node, min of neighbors), saving the initial
-    # distinct + checkpoint and the first join round (the LPA round-1
-    # lesson applied to CC).
-    obs = Observation("cc_label_sum")
-    labels = (
-        sym.select(F.col("node").alias("lnode"), F.col("node").alias("label"))
-        .union(
-            sym.select(F.col("node").alias("lnode"), F.col("nbr").alias("label"))
-        )
-        .groupBy("lnode")
-        .agg(F.min("label").alias("label"))
-        .observe(obs, F.sum("label").alias("s"))
-        .localCheckpoint()
-    )
-    prev_sum = obs.get["s"]
+    def step(labels: DataFrame | None) -> DataFrame:
+        if labels is None:
+            # Round 1 is FUSED: with identity labels, label(nbr) == nbr, so
+            # the propagation join is the edge list itself — one aggregate
+            # computes label1(node) = min(node, min of neighbors), saving
+            # the initial distinct + checkpoint and the first join round
+            # (the LPA round-1 lesson applied to CC).
+            labels = sym.select(F.col("node").alias("lnode"), F.col("node").alias("label"))
+            prop = sym.select(F.col("node").alias("lnode"), F.col("nbr").alias("label"))
+        else:
+            prop = sym.join(labels, sym["nbr"] == labels["lnode"]).select(
+                F.col("node").alias("lnode"), F.col("label")
+            )
+        return labels.union(prop).groupBy("lnode").agg(F.min("label").alias("label"))
 
-    for _ in range(max_iter - 1):
-        prop = sym.join(labels, sym["nbr"] == labels["lnode"]).select(
-            F.col("node").alias("lnode"), F.col("label")
-        )
-        obs = Observation("cc_label_sum")
-        labels = (
-            labels.union(prop)
-            .groupBy("lnode")
-            .agg(F.min("label").alias("label"))
-            .observe(obs, F.sum("label").alias("s"))
-            .localCheckpoint()
-        )
-        new_sum = obs.get["s"]
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
+    probe = ("cc_label_sum", F.sum("label").alias("s"))
+    labels = _iterate(step, None, None, max_iter, probe)
     return labels.select(F.col("lnode").alias("node"), "label")
 
 
@@ -116,9 +163,8 @@ def connected_components_star(
     as a propagation round, but the edge set contracts geometrically
     instead of labels creeping one hop per round. Convergence: the edge
     set reaches the star forest (node -> component min) and stops
-    changing; probed per round with the O(1) scalar discipline
-    (BIT_XOR(xxhash64(a, b)) + count riding the localCheckpoint job via
-    ``observe`` — the pair rows are unique, so the hash moves whenever
+    changing; ``_iterate`` probes it per round with BIT_XOR(xxhash64(a,
+    b)) + count (the pair rows are unique, so the hash moves whenever
     the set does, w.h.p.). Returns (node, label) for every node that
     appears in an edge, label = min node id of its component — the SAME
     contract as ``connected_components``; equality on random graphs and
@@ -135,10 +181,8 @@ def connected_components_star(
         .distinct()
         .localCheckpoint()
     )
-    # canonical undirected pairs (a > b not required yet; just a != b)
-    e = raw.filter(F.col("a") != F.col("b")).distinct().localCheckpoint()
-    prev_hash = None
-    for _ in range(max_rounds):
+
+    def step(e: DataFrame) -> DataFrame:
         # ---- large-star: from each node u, every neighbor v > u attaches
         # to m(u) = min(neighborhood(u) + u). Processes each undirected
         # edge from BOTH endpoints via the symmetric expansion; output
@@ -165,21 +209,12 @@ def connected_components_star(
             .select(F.col("b").alias("a"), F.col("m").alias("b"))
             .filter(F.col("a") != F.col("b"))
         )
-        obs = Observation("cc_star_edge_hash")
-        e = (
-            rewired.union(mn2.select(F.col("a"), F.col("m").alias("b")))
-            .distinct()
-            .observe(
-                obs,
-                F.expr("bit_xor(xxhash64(a, b))").alias("h"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .localCheckpoint()
-        )
-        h = (obs.get["h"], obs.get["n"])
-        if h == prev_hash:
-            break
-        prev_hash = h
+        return rewired.union(mn2.select(F.col("a"), F.col("m").alias("b"))).distinct()
+
+    # canonical undirected pairs (a > b not required yet; just a != b)
+    e = raw.filter(F.col("a") != F.col("b")).distinct().localCheckpoint()
+    probe = ("cc_star_edge_hash", _xor_hash("a", "b"), F.count(F.lit(1)).alias("n"))
+    e = _iterate(step, e, None, max_rounds, probe)
     # e is now the star forest: (node, component-min) for non-roots.
     # Roots (and only roots) never appear on the left; they label
     # themselves. Isolated nodes can't occur (every input row is an edge).
@@ -206,18 +241,15 @@ def label_propagation(
 
     ``rounds=N`` is the FIXED-DEPTH mode the catalog entry uses
     (oracle-replayable as an unrolled CTE chain — N=4 there is a demo
-    depth, not a convergence claim). ``rounds=None`` is CONVERGED MODE:
-    iterate until the label assignment reaches a fixpoint, detected per
-    round with the same O(1)-scalar discipline as
-    ``connected_components`` — one single-row aggregate,
-    BIT_XOR(xxhash64(node, lbl)), changes whenever any label changes
-    (w.h.p.; (node, lbl) rows are unique per node so no xor-cancellation,
-    and xor can't hit ANSI mode's int64 SUM overflow) and costs no
-    self-join diff. Capped at ``max_rounds`` because
-    synchronous LPA can 2-cycle on bipartite-ish neighborhoods (the
-    classic LPA caveat); a production run picks the cap by graph diameter
-    expectations and treats hitting it as "oscillating, take the current
-    assignment".
+    depth, not a convergence claim), with a lineage cut every
+    ``checkpoint_interval`` rounds. ``rounds=None`` is CONVERGED MODE:
+    iterate until the label assignment reaches a fixpoint, probed per
+    round by BIT_XOR(xxhash64(node, lbl)) — (node, lbl) rows are unique
+    per node. Both modes are ``_iterate``'s. Capped at ``max_rounds``
+    because synchronous LPA can 2-cycle on bipartite-ish neighborhoods
+    (the classic LPA caveat); a production run picks the cap by graph
+    diameter expectations and treats hitting it as "oscillating, take the
+    current assignment".
 
     The per-round argmax rides one integer encoding (score = n·K − lbl,
     decode lbl = K − score mod K), so each round is ONE equi-join keyed
@@ -225,26 +257,11 @@ def label_propagation(
     Round 1 is fused: identity labels make the label join a no-op, so
     the edge list groups directly (saves a distinct + join off the
     front).
-
-    Lineage cuts are INTERVAL-based in fixed-depth mode: a
-    localCheckpoint every ``checkpoint_interval`` rounds (never after
-    the final round — the consumer's own action executes the last
-    segment), so a demo-depth run (rounds=4) is ONE unrolled Spark job
-    instead of one materialization job per round — isolated min-of-3 at
-    sf0.1: 3.18 s -> 2.09 s, labels identical — while deep runs still
-    cut the plan every 4 rounds before planning time can compound.
-    Converged mode checkpoints every round regardless: the fixpoint
-    probe needs each round's labels materialized anyway, and the
-    ``observe`` scalar rides that job for free.
     """
     K = 1_000_000_000  # argmax encoding: score = n*K - lbl (0 < lbl < K)
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    labels = None
-    prev_hash = None
-    done = 0
-    while (rounds is not None and done < rounds) or (
-        rounds is None and done < max_rounds
-    ):
+
+    def step(labels: DataFrame | None) -> DataFrame:
         if labels is None:
             counts = e.groupBy(
                 F.col("dst").alias("node"), F.col("src").alias("lbl")
@@ -255,29 +272,30 @@ def label_propagation(
                 .groupBy(F.col("dst").alias("node"), "lbl")
                 .agg(F.count(F.lit(1)).alias("n"))
             )
-        labels = counts.groupBy("node").agg(
+        return counts.groupBy("node").agg(
             (F.lit(K) - (F.max(F.col("n") * K - F.col("lbl")) % K))
             .cast("long")
             .alias("lbl")
         )
-        if rounds is None:
-            # the probe rides the checkpoint job via observe (fires on
-            # localCheckpoint's eager materialization) — one job per
-            # round, not checkpoint + a separate collect
-            obs = Observation("lpa_label_hash")
-            labels = labels.observe(
-                obs, F.expr("bit_xor(xxhash64(node, lbl))").alias("h")
-            ).localCheckpoint()
-            done += 1
-            h = obs.get["h"]
-            if h == prev_hash:
-                break
-            prev_hash = h
-        else:
-            done += 1
-            if done % checkpoint_interval == 0 and done < rounds:
-                labels = labels.localCheckpoint()
-    return labels
+
+    probe = ("lpa_label_hash", _xor_hash("node", "lbl"))
+    return _iterate(step, None, rounds, max_rounds, probe, every=checkpoint_interval)
+
+
+def kcore_peel(e: DataFrame, k: int) -> DataFrame:
+    """One k-core peel of a SYMMETRIC (src, dst) edge list: drop the
+    edges touching a node of degree < k (out-degree IS degree there)."""
+    keep = (
+        e.groupBy("src")
+        .agg(F.count(F.lit(1)).alias("deg"))
+        .filter(F.col("deg") >= k)
+        .select(F.col("src").alias("node"))
+    )
+    return (
+        e.join(keep.withColumnRenamed("node", "src"), "src", "semi")
+        .join(keep.withColumnRenamed("node", "dst"), "dst", "semi")
+        .select("src", "dst")
+    )
 
 
 def kcore(
@@ -290,56 +308,29 @@ def kcore(
 ) -> DataFrame:
     """k-core peeling (Seidman's degeneracy algorithm) over a SYMMETRIC
     directed edge list (both directions present, as ``copurchase_edges``
-    emits — so out-degree IS degree): repeatedly drop nodes with degree
-    < k and the edges touching them. Returns the surviving edge list
-    (src, dst).
+    emits): repeatedly ``kcore_peel`` — drop nodes with degree < k and the
+    edges touching them. Returns the surviving edge list (src, dst).
 
     ``rounds=N`` is fixed-depth (the ``graph_kcore`` catalog entry's
-    oracle-replayable demo form — it keeps its own loop because its
-    output is per-round STATS, but it must stay in lockstep with this
-    operator; pinned by test). ``rounds=None`` is CONVERGED mode —
-    peel to the true k-core — with the O(1)-scalar discipline of the
-    other iterative operators: edges only ever shrink, so the edge
-    COUNT is monotone and "count unchanged" means "edge set unchanged";
-    the count rides each round's localCheckpoint job via ``observe``.
-    Per-round checkpoints are load-bearing here (not hygiene): each
-    round's edge list is referenced three times by the next round
-    (degree aggregate + two semi-joins), so skipping the cut would
-    replay the whole peel pyramid per reference. AQE converts the
-    survivor semi-joins to broadcasts at fixture scale and keeps
-    shuffle joins when the survivor set outgrows the threshold —
-    verified in the executed plan (ReusedExchange on the edge side,
+    oracle-replayable demo form, which runs the same ``kcore_peel`` in a
+    loop of its own because its output is per-round STATS). ``rounds=None``
+    is CONVERGED mode — peel to the true k-core: edges only ever shrink,
+    so the edge COUNT is monotone and "count unchanged" means "edge set
+    unchanged"; that count is ``_iterate``'s probe. Lineage is cut after
+    every round (at fixed depth, every round but the last): each round's
+    edge list is referenced three times by the next round (degree
+    aggregate + two semi-joins), so skipping the cut would replay the
+    whole peel pyramid per reference.
+    AQE converts the survivor semi-joins to broadcasts at fixture scale
+    and keeps shuffle joins when the survivor set outgrows the threshold
+    — verified in the executed plan (ReusedExchange on the edge side,
     BroadcastHashJoin x2).
     """
     e = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst")
     ).localCheckpoint()
-    prev_n = None
-    done = 0
-    while (rounds is not None and done < rounds) or (
-        rounds is None and done < max_rounds
-    ):
-        keep = (
-            e.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .filter(F.col("deg") >= k)
-            .select(F.col("src").alias("node"))
-        )
-        obs = Observation("kcore_n_edges")
-        e = (
-            e.join(keep.withColumnRenamed("node", "src"), "src", "semi")
-            .join(keep.withColumnRenamed("node", "dst"), "dst", "semi")
-            .select("src", "dst")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint()
-        )
-        done += 1
-        if rounds is None:
-            n = obs.get["n"]
-            if n == prev_n:
-                break
-            prev_n = n
-    return e
+    probe = ("kcore_n_edges", F.count(F.lit(1)).alias("n"))
+    return _iterate(partial(kcore_peel, k=k), e, rounds, max_rounds, probe)
 
 
 def pagerank_int(
@@ -363,23 +354,17 @@ def pagerank_int(
     Same scale hygiene as ``connected_components``: the symmetric edge
     list + out-degrees materialize ONCE (one localCheckpoint, pairs-only
     rows); each iteration is one join + one shuffle on the destination
-    key. Lineage cuts are INTERVAL-based in fixed-depth mode (a
-    localCheckpoint every ``checkpoint_interval`` iterations, never
-    after the last — the ``label_propagation`` lesson: a demo-depth run
-    is one unrolled job, deep runs still cut the plan before planning
-    time compounds); converged mode checkpoints every round because the
-    fixpoint probe rides that job.
+    key, and ``_iterate`` places the lineage cuts.
 
     ``iterations=N`` is FIXED-DEPTH mode — the catalog entry's choice,
     keeping the oracle replayable as an unrolled SQL CTE chain (a DEMO
-    DEPTH, like ``label_propagation(rounds=N)``). ``iterations=None`` is
-    CONVERGED MODE: iterate until the integer rank assignment reaches an
-    exact fixpoint — integer ranks make exact detection meaningful where
-    float PageRank needs an epsilon — probed per round with the same
-    O(1) single-row scalar as converged LPA (BIT_XOR(xxhash64(node, r)),
-    riding the localCheckpoint job via ``observe`` so the probe costs no
-    second job). The damped map contracts geometrically at rate
-    damp_pct/100, so reaching the EXACT integer fixpoint takes about
+    DEPTH, like ``label_propagation(rounds=N)``), with a cut every
+    ``checkpoint_interval`` iterations. ``iterations=None`` is CONVERGED
+    MODE: iterate until the integer rank assignment reaches an exact
+    fixpoint — integer ranks make exact detection meaningful where float
+    PageRank needs an epsilon — probed per round by BIT_XOR(xxhash64(node,
+    r)). The damped map contracts geometrically at rate damp_pct/100, so
+    reaching the EXACT integer fixpoint takes about
     log(1e6)/log(100/damp_pct) rounds (~85 at the default 85% — a
     property of the ppm resolution, not the graph; measured 76 on a
     5-node fixture). ``max_iterations`` defaults above that; truncation
@@ -392,9 +377,10 @@ def pagerank_int(
     after ~log(1e6/tol)/log(100/damp_pct) rounds (~43 at tol=1000, damp
     85%) instead of the exact probe's ~85, at the cost of an extra
     equi-join per round against the previous (checkpointed, so
-    replayed-from-blocks) assignment. The delta scalar rides the same
-    checkpoint job via ``observe``. tol_ppm=0 keeps the exact-hash
-    probe, which is what makes that mode cross-engine replayable.
+    replayed-from-blocks) assignment. The max-delta is the probe, and the
+    exit starts at round 2, the first with a previous assignment to diff
+    against. tol_ppm=0 keeps the exact-hash probe, which is what makes
+    that mode cross-engine replayable.
     Returns (node, rank_ppm) for every node in an edge.
     """
     if tol_ppm > 0 and iterations is not None:
@@ -410,13 +396,9 @@ def pagerank_int(
     )
     deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     ed = sym.join(deg, "src").localCheckpoint()
-    ranks = None
-    prev_hash = None
-    done = 0
-    while (iterations is not None and done < iterations) or (
-        iterations is None and done < max_iterations
-    ):
-        if ranks is None:
+
+    def step(prev: DataFrame | None) -> DataFrame:
+        if prev is None:
             # round 1 fused: ranks are uniform (1_000_000), so the rank
             # join is a no-op — contributions come straight off the edge
             # list, saving the initial distinct and the first join (the
@@ -425,52 +407,32 @@ def pagerank_int(
                 F.col("dst"), F.expr("1000000 div deg").alias("c")
             )
         else:
-            contrib = ed.join(ranks, ed.src == ranks.node).select(
+            contrib = ed.join(prev, ed.src == prev.node).select(
                 F.col("dst"), F.expr("r div deg").alias("c")
             )
-        prev = ranks
         ranks = contrib.groupBy(F.col("dst").alias("node")).agg(
             (
                 F.lit(base_ppm) + F.expr(f"({damp_pct} * sum(c)) div 100")
             ).alias("r")
         )
-        if iterations is None and tol_ppm > 0:
-            if prev is None:
-                # no previous assignment to diff against — round 1 just
-                # materializes; the delta exit starts at round 2
-                ranks = ranks.localCheckpoint()
-                done += 1
-                continue
-            obs = Observation("pr_rank_delta")
-            ranks = (
-                ranks.join(
-                    prev.select(
-                        F.col("node").alias("pn"), F.col("r").alias("pr")
-                    ),
-                    F.col("node") == F.col("pn"),
-                )
-                .select(
-                    "node", "r", F.abs(F.col("r") - F.col("pr")).alias("d")
-                )
-                .observe(obs, F.max("d").alias("m"))
-                .select("node", "r")
-                .localCheckpoint()
-            )
-            done += 1
-            if int(obs.get["m"] or 0) <= tol_ppm:
-                break
-        elif iterations is None:
-            obs = Observation("pr_rank_hash")
-            ranks = ranks.observe(
-                obs, F.expr("bit_xor(xxhash64(node, r))").alias("h")
-            ).localCheckpoint()
-            done += 1
-            h = obs.get["h"]
-            if h == prev_hash:
-                break
-            prev_hash = h
-        else:
-            done += 1
-            if done % checkpoint_interval == 0 and done < iterations:
-                ranks = ranks.localCheckpoint()
+        if tol_ppm == 0:
+            return ranks
+        if prev is None:
+            return ranks.withColumn("d", F.lit(None).cast("long"))
+        return ranks.join(
+            prev.select(F.col("node").alias("pn"), F.col("r").alias("pr")),
+            F.col("node") == F.col("pn"),
+        ).select("node", "r", F.abs(F.col("r") - F.col("pr")).alias("d"))
+
+    if tol_ppm > 0:
+        probe = ("pr_rank_delta", F.max("d").alias("m"))
+
+        def stop(last: dict | None, got: dict) -> bool:
+            return last is not None and int(got["m"] or 0) <= tol_ppm
+
+    else:
+        probe, stop = ("pr_rank_hash", _xor_hash("node", "r")), operator.eq
+    ranks = _iterate(
+        step, None, iterations, max_iterations, probe, stop, checkpoint_interval
+    )
     return ranks.select("node", F.col("r").alias("rank_ppm"))

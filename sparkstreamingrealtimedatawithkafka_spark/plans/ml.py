@@ -1018,10 +1018,11 @@ def graph_community_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
     second pass — no window, no argmax UDF, just MAX over a bigint.
 
     Scale: each round is one equi-join keyed on the edge source + two
-    keyed aggregates — Pregel rounds as DataFrame ops with INTERVAL
-    lineage cuts (checkpoint_interval=4, never after the final round —
-    at this demo depth the plan unrolls into ONE Spark job; measured
-    3.11 -> 2.60 s at sf0.1). Edges come
+    keyed aggregates — Pregel rounds as DataFrame ops, driven by the
+    graph operators' shared loop (``operators.graph._iterate``) with
+    INTERVAL lineage cuts (checkpoint_interval=4, never after the final
+    round — at this demo depth the plan unrolls into ONE Spark job;
+    measured 3.11 -> 2.60 s at sf0.1). Edges come
     from the RELATIVE-support expansion (plans/ml.py:copurchase_edges),
     so graph density — and with it the per-round shuffle — stays
     sparsity-stable as volume grows."""
@@ -1269,16 +1270,19 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     genuinely peels (sf0.01: 1.9k nodes -> 243 over three rounds).
 
     Scale: per round one groupBy on src plus survivor semi-joins keyed on
-    the same column; the edge list is localCheckpointed per round so the
-    next round's three references replay a materialized artifact, not the
-    growing join pyramid ([[self-referencing-plan-recompute]]). Round
-    count is a FIXED unroll like the PageRank/BFS entries (this loop
-    stays because the OUTPUT is per-round stats); production runs peel
+    the same column — ``operators.graph.kcore_peel``, the peel step the
+    ``kcore`` operator runs; the edge list is localCheckpointed per round
+    (the final one too, since the stats read it) so the next round's three
+    references replay a materialized artifact, not the growing join
+    pyramid ([[self-referencing-plan-recompute]]). Round count is a FIXED
+    unroll like the PageRank/BFS entries; the entry keeps a loop of its
+    own only because its OUTPUT is per-round stats. Production runs peel
     to the true core with ``operators.graph.kcore(rounds=None)``, whose
     fixpoint probe is the monotone edge COUNT riding each checkpoint job
-    via observe — lockstep with this entry is pinned in
-    tests/test_graph_convergence.py. Edge semantics are volume-relative
-    via ``copurchase_edges`` so the peel depth is scale-stable."""
+    via observe. Edge semantics are volume-relative via
+    ``copurchase_edges`` so the peel depth is scale-stable."""
+    from sparkstreamingrealtimedatawithkafka_spark.operators.graph import kcore_peel
+
     li = t(spark, sf_dir, "lineitem")
     e = copurchase_edges(li).localCheckpoint()
 
@@ -1291,18 +1295,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out = stats(e, 0)
     for rnd in range(1, 4):
-        keep = (
-            e.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .filter(F.col("deg") >= 4)
-            .select(F.col("src").alias("node"))
-        )
-        e = (
-            e.join(keep.withColumnRenamed("node", "src"), "src", "semi")
-            .join(keep.withColumnRenamed("node", "dst"), "dst", "semi")
-            .select("src", "dst")
-            .localCheckpoint()
-        )
+        e = kcore_peel(e, 4).localCheckpoint()
         out = out.unionByName(stats(e, rnd))
     return out
 

@@ -121,6 +121,13 @@ LOCAL_FS_CLASS = "sparkstreamingrealtimedatawithkafka_spark.jvm.NioLocalFileSyst
 LOCAL_FS_JAR = Path(__file__).resolve().parent / "jvm" / "nio-local-fs.jar"
 DRIVER_CLASS_PATH_CONF = "spark.driver.extraClassPath"
 
+JAVA_OPTIONS_CONF = "spark.driver.extraJavaOptions"
+# A 150-query session compiles thousands of whole-stage-codegen classes;
+# the JVM's default 240 MB code cache fills and late queries fall back to
+# the interpreter (A/B on the bench preamble: dedup_simhash 4.01s -> 3.22s
+# min-of-2 with the larger cache).
+CODE_CACHE_OPTION = "-XX:ReservedCodeCacheSize=512m"
+
 
 def _spark_defaults() -> dict[str, str]:
     """``spark-defaults.conf`` as spark-submit finds it; a builder conf
@@ -134,7 +141,16 @@ def _spark_defaults() -> dict[str, str]:
     return {p[0]: p[1] if len(p) > 1 else "" for p in pairs if p[0] and not p[0].startswith(("#", "!"))}
 
 
-def _local_fs_confs(extra: dict[str, str]) -> dict[str, str]:
+def _ahead_of_caller(key: str, value: str, sep: str, extra: dict[str, str], defaults: dict[str, str]) -> str:
+    """``value`` followed by the caller's own value for the launch conf
+    ``key``: the one from ``extra=``, or else the one from
+    ``spark-defaults.conf``, which the builder's conf would otherwise
+    replace. The caller's entries come later, so where a later entry wins
+    (a repeated ``-XX`` flag) the caller's does."""
+    return sep.join(filter(None, [value, extra.get(key, defaults.get(key))]))
+
+
+def _local_fs_confs(extra: dict[str, str], defaults: dict[str, str]) -> dict[str, str]:
     """The launch confs that make ``file:`` the package's FS, or none where
     this call cannot put the jar on the driver's class path or the caller
     chose the FS (see the module docstring)."""
@@ -145,12 +161,10 @@ def _local_fs_confs(extra: dict[str, str]) -> dict[str, str]:
     names = {arg.split("=", 1)[0] for arg in shlex.split(submit)}
     if names & {"--driver-class-path", "--properties-file", DRIVER_CLASS_PATH_CONF, LOCAL_FS_CONF}:
         return {}
-    defaults = _spark_defaults()
     if LOCAL_FS_CONF in extra or LOCAL_FS_CONF in defaults:
         return {}
-    caller = extra.get(DRIVER_CLASS_PATH_CONF, defaults.get(DRIVER_CLASS_PATH_CONF))
     return {
-        DRIVER_CLASS_PATH_CONF: os.pathsep.join(filter(None, [str(LOCAL_FS_JAR), caller])),
+        DRIVER_CLASS_PATH_CONF: _ahead_of_caller(DRIVER_CLASS_PATH_CONF, str(LOCAL_FS_JAR), os.pathsep, extra, defaults),
         LOCAL_FS_CONF: LOCAL_FS_CLASS,
     }
 
@@ -183,18 +197,13 @@ def build_session(
         # freeze confs asynchronously after start().
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
-        # A 150-query session compiles thousands of whole-stage-codegen
-        # classes; the JVM's default 240 MB code cache fills and late
-        # queries fall back to the interpreter (A/B on the bench preamble:
-        # dedup_simhash 4.01s -> 3.22s min-of-2 with the larger cache).
-        .config("spark.driver.extraJavaOptions", "-XX:ReservedCodeCacheSize=512m")
-        # The same problem one level up: Spark's LRU cache of compiled
-        # generated classes holds 100 by default, fewer than a many-query
-        # session cycles through, so every pass would recompile them. Sized at
-        # the next round number >= 2x the measured working set (1,185
-        # classes: bench warm-up + one sf0.1 pass; see the module
-        # docstring). Static and JVM-wide: only a builder conf before the
-        # first getOrCreate() in a JVM takes effect.
+        # The problem of CODE_CACHE_OPTION one level up: Spark's LRU cache
+        # of compiled generated classes holds 100 by default, fewer than a
+        # many-query session cycles through, so every pass would recompile
+        # them. Sized at the next round number >= 2x the measured working
+        # set (1,185 classes: bench warm-up + one sf0.1 pass; see the
+        # module docstring). Static and JVM-wide: only a builder conf
+        # before the first getOrCreate() in a JVM takes effect.
         .config(CODEGEN_CACHE_CONF, str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
     )
@@ -202,10 +211,13 @@ def build_session(
         # Per-task zipimport re-reads in every Python worker; CPython 3.13
         # fixed them itself (see the module docstring).
         builder = builder.config(PYTHON_DAEMON_CONF, worker_daemon.__name__)
-    # ``file:`` writes set permissions without forking ``chmod`` (see the
-    # module docstring); the class path already holds any caller entry.
+    # The code-cache flag, and ``file:`` writes that set permissions
+    # without forking ``chmod`` (see the module docstring); both launch
+    # confs already hold any caller entry.
     extra = extra or {}
-    for key, value in {**extra, **_local_fs_confs(extra)}.items():
+    defaults = _spark_defaults()
+    java_options = _ahead_of_caller(JAVA_OPTIONS_CONF, CODE_CACHE_OPTION, " ", extra, defaults)
+    for key, value in {**extra, JAVA_OPTIONS_CONF: java_options, **_local_fs_confs(extra, defaults)}.items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
     served = spark.sparkContext._jsc.sc().listJars().mkString(" ")

@@ -288,9 +288,10 @@ def test_kcore_converged_handles_fully_peeled_graph(spark):
 
 
 def test_kcore_entry_in_lockstep_with_operator(spark):
-    """graph_kcore keeps its own loop (it outputs per-round stats); its
-    final-round stats must equal the operator at the same fixed depth on
-    the same edges — the two implementations cannot drift."""
+    """graph_kcore runs the operator's ``kcore_peel`` in a loop of its own
+    (it outputs per-round stats); its final-round stats must equal the
+    operator at the same fixed depth on the same edges — the entry's loop
+    and the operator's cannot drift."""
     from sparkstreamingrealtimedatawithkafka_spark.plans.ml import (
         copurchase_edges,
         graph_kcore,
