@@ -1,8 +1,12 @@
 from __future__ import annotations
 
+import contextlib
+import itertools
+
 import pytest
 
 from sparkstreamingrealtimedatawithkafka_spark.session import build_session
+from sparkstreamingrealtimedatawithkafka_spark.sources.registry import TABLES, load_table
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -22,3 +26,39 @@ def spark():
     spark = build_session(**SESSION_KW)
     yield spark
     spark.stop()
+
+
+def warm_schemas(spark) -> None:
+    """The first load of a fixture table in a process runs a footer job to
+    infer its schema (sources/registry.py); resolving every table up front
+    keeps a job count independent of the tests that ran before it."""
+    for name in TABLES:
+        load_table(spark, SF_DIR, name)
+
+
+@pytest.fixture(scope="session")
+def schemas(spark):
+    warm_schemas(spark)
+
+
+_groups = itertools.count()
+
+
+@contextlib.contextmanager
+def job_count(spark):
+    """Count the Spark jobs launched inside the block, in a job group of
+    their own: yields a function that returns the group's count so far."""
+    sc = spark.sparkContext
+    group = f"job-count-{next(_groups)}"
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+
+    def count() -> int:
+        bus.waitUntilEmpty()
+        return len(tracker.getJobIdsForGroup(group))
+
+    sc.setJobGroup(group, group)
+    try:
+        yield count
+    finally:
+        sc._jsc.clearJobGroup()

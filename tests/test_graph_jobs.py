@@ -18,8 +18,6 @@ Every operator runs at least one round: a depth or cap below 1 raises.
 
 from __future__ import annotations
 
-import itertools
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -31,11 +29,8 @@ from sparkstreamingrealtimedatawithkafka_spark.operators.graph import (
     pagerank_int,
 )
 from sparkstreamingrealtimedatawithkafka_spark.plans.registry import REGISTRY
-from sparkstreamingrealtimedatawithkafka_spark.sources.registry import TABLES, load_table
 
-SF_DIR = "/root/testdata/sf0.001"
-
-_groups = itertools.count()
+from conftest import SF_DIR, job_count
 
 # Two components, a 5-node path (diameter 4) and a triangle with a tail.
 PAIRS = [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (11, 12), (10, 12), (12, 13)]
@@ -52,21 +47,12 @@ def _sym(spark, pairs):
 
 def _jobs(spark, run):
     """``(eager, total)`` job counts of ``run()`` and one collect of its
-    result, counted in a job group of their own."""
-    sc = spark.sparkContext
-    group = f"graph-jobs-{next(_groups)}"
-    tracker = sc.statusTracker()
-    bus = sc._jsc.sc().listenerBus()
-    sc.setJobGroup(group, group)
-    try:
+    result."""
+    with job_count(spark) as jobs:
         df = run()
-        bus.waitUntilEmpty()
-        eager = len(tracker.getJobIdsForGroup(group))
+        eager = jobs()
         rows = df.collect()
-        bus.waitUntilEmpty()
-        total = len(tracker.getJobIdsForGroup(group))
-    finally:
-        sc._jsc.clearJobGroup()
+        total = jobs()
     assert rows
     return eager, total
 
@@ -101,15 +87,6 @@ def test_operator_job_counts(spark, name):
     pairs, run, want = OPERATOR_RUNS[name]
     e = _sym(spark, pairs)
     assert _jobs(spark, lambda: run(e)) == want
-
-
-@pytest.fixture(scope="module")
-def schemas(spark):
-    """The first load of a fixture table in a process runs a footer job to
-    infer its schema (sources/registry.py); resolving every table up front
-    keeps an entry's count independent of the tests that ran before it."""
-    for name in TABLES:
-        load_table(spark, SF_DIR, name)
 
 
 # The catalog entries that run the graph operators, and their counts at
