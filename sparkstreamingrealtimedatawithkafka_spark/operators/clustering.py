@@ -129,11 +129,10 @@ def kmeans(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Lloyd's k-means with deterministic init (the k lowest-id vectors).
-    Returns the final assignment (id, cluster)."""
-    centroids = _init_centroids(points, k, id_col, vec_col)
-    points = widen_for_compute(points)  # see kmeans_centroids
-    assigned = None
-    for _ in range(iters):
-        assigned = assign_nearest(points, centroids, id_col, vec_col)
-        centroids = update_centroids(assigned, centroids)
+    Returns the final assignment (id, cluster): the ``iters``-th assignment,
+    to the centroids of ``iters - 1`` updates."""
+    if iters < 1:
+        raise ValueError(f"kmeans needs at least one iteration, got iters={iters}")
+    centroids = kmeans_centroids(points, k, iters - 1, id_col, vec_col)
+    assigned = assign_nearest(widen_for_compute(points), centroids, id_col, vec_col)
     return assigned.select("id", "cluster")

@@ -4,6 +4,7 @@ easily separable constructed dataset."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from sparkstreamingrealtimedatawithkafka_spark.operators.clustering import (
@@ -56,3 +57,10 @@ def test_kmeans_on_fixture_covers_all_points(spark):
     n = emb.count()
     assert assigned.count() == n
     assert assigned.select("cluster").distinct().count() <= 8
+
+
+def test_kmeans_rejects_zero_iterations(spark):
+    # Before, iters=0 failed with AttributeError on None.select.
+    pts = spark.createDataFrame([(0, [0.0, 0.0])], "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match="at least one iteration"):
+        kmeans(pts, k=1, iters=0)
