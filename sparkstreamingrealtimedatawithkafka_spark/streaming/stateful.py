@@ -50,23 +50,20 @@ USER_STATS_SCHEMA = StructType(
 )
 
 
-def _update_user_stats(
+def _fold_user_stats(
     key: tuple[Any, ...],
     pdfs: Iterable[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """Merge this batch's rows for one user into durable state and emit the
-    running totals (update semantics: one row per user per batch).
+    prior: tuple[Any, ...] | None,
+) -> tuple[tuple[Any, ...], pd.DataFrame]:
+    """Merge this batch's rows for one user into the carried
+    ``(n_events, value_cents, first_us, last_us)`` (``None``: no state yet);
+    returns the new state and its one-row output frame.
 
     Value accumulation happens in integer cents (exact, associative) so the
     emitted totals are independent of row order within the batch — the same
     determinism contract as the relational catalog (plans/_util.py).
     """
-    if state.exists:
-        n, cents_total, first_us, last_us = state.get
-    else:
-        n, cents_total, first_us, last_us = 0, 0, None, None
-
+    n, cents_total, first_us, last_us = prior if prior is not None else (0, 0, None, None)
     for pdf in pdfs:
         if len(pdf) == 0:
             continue
@@ -76,17 +73,21 @@ def _update_user_stats(
         hi = int(pdf["ts_us"].max())
         first_us = lo if first_us is None else min(first_us, lo)
         last_us = hi if last_us is None else max(last_us, hi)
+    stats = (n, cents_total, first_us, last_us)
+    row = {"user_id": [key[0]], **{f.name: [v] for f, v in zip(_STATE_SCHEMA.fields, stats)}}
+    return stats, pd.DataFrame(row)
 
-    state.update((n, cents_total, first_us, last_us))
-    yield pd.DataFrame(
-        {
-            "user_id": [key[0]],
-            "n_events": [n],
-            "value_cents": [cents_total],
-            "first_us": [first_us],
-            "last_us": [last_us],
-        }
-    )
+
+def _update_user_stats(
+    key: tuple[Any, ...],
+    pdfs: Iterable[pd.DataFrame],
+    state: GroupState,
+) -> Iterator[pd.DataFrame]:
+    """Emit one user's running totals after this batch (update semantics:
+    one row per user per batch), carried in durable state."""
+    stats, out = _fold_user_stats(key, pdfs, state.get if state.exists else None)
+    state.update(stats)
+    yield out
 
 
 class UserStatsProcessor(StatefulProcessor):
@@ -103,27 +104,9 @@ class UserStatsProcessor(StatefulProcessor):
         )
 
     def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-        prior = self._stats.get()
-        n, cents_total, first_us, last_us = prior if prior is not None else (0, 0, None, None)
-        for pdf in rows:
-            if len(pdf) == 0:
-                continue
-            n += len(pdf)
-            cents_total += int(round(pdf["value"].mul(100).round(0).sum()))
-            lo = int(pdf["ts_us"].min())
-            hi = int(pdf["ts_us"].max())
-            first_us = lo if first_us is None else min(first_us, lo)
-            last_us = hi if last_us is None else max(last_us, hi)
-        self._stats.update((n, cents_total, first_us, last_us))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "value_cents": [cents_total],
-                "first_us": [first_us],
-                "last_us": [last_us],
-            }
-        )
+        stats, out = _fold_user_stats(key, rows, self._stats.get())
+        self._stats.update(stats)
+        yield out
 
     def close(self) -> None:
         pass

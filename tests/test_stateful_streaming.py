@@ -11,11 +11,18 @@ state-store commits.
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from sparkstreamingrealtimedatawithkafka_spark.streaming.stateful import user_running_stats
+from sparkstreamingrealtimedatawithkafka_spark.streaming.stateful import (
+    USER_STATS_SCHEMA,
+    UserStatsProcessor,
+    _update_user_stats,
+    user_running_stats,
+)
 
 
 @pytest.fixture()
@@ -83,3 +90,57 @@ def test_state_accumulates_across_micro_batches(spark, tmp_path, split_events):
     # at least one user must span multiple batches for this test to mean
     # anything (emissions > distinct users)
     assert len(out) > len(expected)
+
+
+class _ValueState:
+    """A ``transformWithStateInPandas`` value-state handle, in memory."""
+
+    def __init__(self):
+        self.value = None
+
+    def get(self):
+        return self.value
+
+    def update(self, value):
+        self.value = tuple(value)
+
+
+class _GroupState:
+    """An ``applyInPandasWithState`` ``GroupState``, in memory."""
+
+    def __init__(self):
+        self.value = None
+
+    @property
+    def exists(self):
+        return self.value is not None
+
+    @property
+    def get(self):
+        return self.value
+
+    def update(self, value):
+        self.value = tuple(value)
+
+
+def test_both_stateful_apis_fold_alike():
+    """``applyInPandasWithState``'s function and ``transformWithStateInPandas``'s
+    processor carry the same state and emit the same frames over two batches
+    (the processor cannot run here: its state protocol needs protobuf)."""
+    batches = [
+        [
+            pd.DataFrame({"value": [1.25, 2.5], "ts_us": [30, 10]}),
+            pd.DataFrame({"value": [], "ts_us": []}),
+        ],
+        [pd.DataFrame({"value": [0.1, 4.0, 3.3], "ts_us": [50, 5, 20]})],
+    ]
+    group_state, value_state = _GroupState(), _ValueState()
+    processor = UserStatsProcessor()
+    processor.init(SimpleNamespace(getValueState=lambda name, schema: value_state))
+    for batch in batches:
+        (by_function,) = _update_user_stats((7,), iter(batch), group_state)
+        (by_processor,) = processor.handleInputRows((7,), iter(batch), None)
+        pd.testing.assert_frame_equal(by_function, by_processor)
+        assert group_state.value == value_state.value
+    assert group_state.value == (5, 1115, 5, 50)
+    assert list(by_function.columns) == USER_STATS_SCHEMA.fieldNames()
