@@ -176,3 +176,23 @@ def test_scale_check_materializes_a_full_schema_10x_sf_dir(spark, tmp_path):
         for d in (SF_DIR, out)
     ]
     assert groups[1] == {g: 10 * n for g, n in groups[0].items()}
+
+
+def test_scale_check_synthetic_row_builds_no_10x_dir(spark, monkeypatch, capsys):
+    """``ccstar_path`` reads no fixture: a run of that row alone neither
+    materializes the 10x sf-dir nor counts its rows."""
+    from tools import scale_check
+
+    def no_materialize(*args):
+        raise AssertionError("materialize called for a synthetic-only run")
+
+    monkeypatch.setattr(scale_check, "materialize", no_materialize)
+    monkeypatch.setattr(scale_check, "build_session", lambda **kw: spark)
+    monkeypatch.setattr(scale_check, "SF_DIR", SF_DIR)
+    monkeypatch.setattr(scale_check, "min_time", lambda spark, build: 1.0)
+    monkeypatch.setattr(scale_check, "ccstar_path", lambda spark, n: None)
+    monkeypatch.setattr(sys, "argv", ["scale_check.py", scale_check.SYNTHETIC])
+    scale_check.main()
+    summary = json.loads(capsys.readouterr().out.splitlines()[-1])
+    assert list(summary["rows"]) == [scale_check.SYNTHETIC]
+    assert "rows_10x" not in summary

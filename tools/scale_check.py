@@ -242,7 +242,13 @@ def main() -> None:
     if unknown:
         raise SystemExit(f"unknown {unknown}: not a REGISTRY key or {SYNTHETIC}")
     spark = build_session(app_name="ssk-scale-check")
-    materialize(spark, SF_DIR, SCALE_DIR)
+    sizes = {}
+    if any(name in REGISTRY for name in names):  # ccstar_path reads no fixture
+        materialize(spark, SF_DIR, SCALE_DIR)
+        sizes = {
+            "rows_1x": load_table(spark, SF_DIR, "lineitem").count(),
+            "rows_10x": load_table(spark, SCALE_DIR, "lineitem").count(),
+        }
 
     # warm up the JVM/codegen/readers so 1x isn't charged the boot cost
     noop(REGISTRY["q1_pricing_summary"].fn(spark, SF_DIR))
@@ -255,8 +261,7 @@ def main() -> None:
         ),
         "master": spark.sparkContext.master,
         "factor": FACTOR,
-        "rows_1x": load_table(spark, SF_DIR, "lineitem").count(),
-        "rows_10x": load_table(spark, SCALE_DIR, "lineitem").count(),
+        **sizes,
         "rows": {},
     }
     for name in names:
