@@ -74,8 +74,7 @@ def _fold_user_stats(
         first_us = lo if first_us is None else min(first_us, lo)
         last_us = hi if last_us is None else max(last_us, hi)
     stats = (n, cents_total, first_us, last_us)
-    row = {"user_id": [key[0]], **{f.name: [v] for f, v in zip(_STATE_SCHEMA.fields, stats)}}
-    return stats, pd.DataFrame(row)
+    return stats, pd.DataFrame([(key[0], *stats)], columns=USER_STATS_SCHEMA.fieldNames())
 
 
 def _update_user_stats(
