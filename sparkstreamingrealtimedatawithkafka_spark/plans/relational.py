@@ -5027,10 +5027,11 @@ def sql_table_cache(spark: SparkSession, sf_dir: str) -> DataFrame:
     store (compressed batches, partition-local) and later plans read
     ``InMemoryTableScan`` instead of re-running the scan+filter. The
     guard asserts the cache is actually IN the plan — a missed cache is
-    a silent full recompute. ``UNCACHE`` is the contract's other half:
+    a silent full recompute. Releasing it is the contract's other half:
     caches pin executor storage memory, so ownership of the release is
-    part of the pattern (the entry uncaches in a finally-posture after
-    materializing its result).
+    part of the pattern (the entry drops the cached view, which uncaches
+    it, after materializing its result; ``UNCACHE`` alone would leave the
+    view, and the next call's ``CACHE TABLE`` would fail on it).
 
     Scale: caching trades storage memory for repeated scan cost — right
     for dimension-sized or aggressively-filtered intermediates, WRONG
@@ -5038,7 +5039,7 @@ def sql_table_cache(spark: SparkSession, sf_dir: str) -> DataFrame:
     persist hot intermediates as TABLES — the band-index/IVM pattern —
     and let the page cache do its job)."""
     t(spark, sf_dir, "orders").createOrReplaceTempView("orders_cache_src")
-    spark.sql("UNCACHE TABLE IF EXISTS orders_hot")
+    spark.sql("DROP VIEW IF EXISTS orders_hot")
     spark.sql(
         """
         CACHE TABLE orders_hot AS
@@ -5055,7 +5056,7 @@ def sql_table_cache(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM orders_hot GROUP BY o_orderpriority
         """
     ).localCheckpoint()
-    spark.sql("UNCACHE TABLE orders_hot")
+    spark.sql("DROP VIEW orders_hot")
     return result
 
 

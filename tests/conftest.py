@@ -5,6 +5,7 @@ import itertools
 
 import pytest
 
+from sparkstreamingrealtimedatawithkafka_spark.plans import REGISTRY
 from sparkstreamingrealtimedatawithkafka_spark.session import build_session
 from sparkstreamingrealtimedatawithkafka_spark.sources.registry import TABLES, load_table
 
@@ -28,17 +29,21 @@ def spark():
     spark.stop()
 
 
-def warm_schemas(spark) -> None:
-    """The first load of a fixture table in a process runs a footer job to
-    infer its schema (sources/registry.py); resolving every table up front
-    keeps a job count independent of the tests that ran before it."""
+def warm_up(spark) -> None:
+    """Do up front the once-per-process work that would otherwise launch
+    jobs in whichever test comes first: the first load of a fixture table
+    runs a footer job to infer its schema (sources/registry.py), and
+    ``join_bucketed_colocated`` writes its bucketed tables once per sf-dir
+    (plans/connectors.py). A job count then does not depend on the tests
+    that ran before it."""
     for name in TABLES:
         load_table(spark, SF_DIR, name)
+    REGISTRY["join_bucketed_colocated"].fn(spark, SF_DIR)
 
 
 @pytest.fixture(scope="session")
-def schemas(spark):
-    warm_schemas(spark)
+def warm(spark):
+    warm_up(spark)
 
 
 _groups = itertools.count()

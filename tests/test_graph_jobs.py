@@ -90,7 +90,7 @@ def test_operator_job_counts(spark, name):
 
 
 # The catalog entries that run the graph operators, and their counts at
-# sf0.001 with every table's schema already resolved.
+# sf0.001 after conftest's warm-up.
 ENTRY_JOBS = {
     "dedup_cc_clusters": (20, 21),
     "dedup_cc_clusters_star": (30, 34),
@@ -102,7 +102,7 @@ ENTRY_JOBS = {
 
 
 @pytest.mark.parametrize("key", list(ENTRY_JOBS))
-def test_entry_job_counts(spark, schemas, key):
+def test_entry_job_counts(spark, warm, key):
     fn = REGISTRY[key].fn
     assert _jobs(spark, lambda: fn(spark, SF_DIR)) == ENTRY_JOBS[key]
 

@@ -12,8 +12,8 @@ A fingerprint holds what a plan change changes:
 The plan is the initial physical plan, read without executing the query:
 under adaptive execution, ``AdaptiveSparkPlanExec``'s input plan after the
 exchanges are placed, the tree ``explain`` prints before a run.
-Every table's schema is resolved first, so an entry's job count does not
-depend on which tests ran before it.
+``conftest.warm_up`` runs first, so an entry's job count does not depend
+on which tests ran before it.
 
 A change of ``tests/plan_fingerprints.json`` is a change of what the
 engine runs; regenerate it from a fresh session with
@@ -39,7 +39,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from sparkstreamingrealtimedatawithkafka_spark.plans import REGISTRY  # noqa: E402
 
-from conftest import SESSION_KW, SF_DIR, job_count, warm_schemas  # noqa: E402
+from conftest import SESSION_KW, SF_DIR, job_count, warm_up  # noqa: E402
 
 GOLDEN = Path(__file__).with_name("plan_fingerprints.json")
 PYTHON_EVAL = "org.apache.spark.sql.execution.python"
@@ -103,12 +103,12 @@ def test_golden_file_covers_the_registry():
 
 
 @pytest.mark.parametrize("key", sorted(REGISTRY))
-def test_plan_fingerprint(spark, schemas, key):
+def test_plan_fingerprint(spark, warm, key):
     assert _fingerprint(spark, key) == _golden().get(key)
 
 
 @pytest.mark.parametrize("key", sorted(REGISTRY))
-def test_python_evals_distinct(spark, schemas, key):
+def test_python_evals_distinct(spark, warm, key):
     """No Python function is evaluated twice over the same input: a copied
     UDF (a plain ``explode`` under the NER UDF did it) shows as two eval
     nodes with one signature."""
@@ -175,6 +175,6 @@ if __name__ == "__main__":
     from sparkstreamingrealtimedatawithkafka_spark.session import build_session
 
     session = build_session(**SESSION_KW)
-    warm_schemas(session)
+    warm_up(session)
     write_golden({key: fingerprint(session, key) for key in sorted(REGISTRY)})
     session.stop()
