@@ -16,7 +16,8 @@ exchanges are placed, the tree ``explain`` prints before a run.
 on which tests ran before it.
 
 A change of ``tests/plan_fingerprints.json`` is a change of what the
-engine runs; regenerate it from a fresh session with
+engine runs. Regenerate it from a fresh session, in the repo root (the
+Python workers import the package from the working directory), with
 
     python tests/test_plan_fingerprints.py
 """
