@@ -8,7 +8,9 @@ per component, mirroring exact dedup's keep-first rule.
 
 Every operator here is a loop of DataFrame rounds; ``_iterate`` is the one
 place that decides when a round's lineage is cut and when the loop has
-reached its fixpoint.
+reached its fixpoint. The two connected-components operators first try
+``_small_components``, which finishes a small graph on the driver without
+any round.
 """
 
 from __future__ import annotations
@@ -17,8 +19,25 @@ import operator
 from collections.abc import Callable
 from functools import partial
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+# Largest edge list, in rows, whose connected components finish on the
+# driver (``_small_components``).
+DRIVER_MAX_EDGES = 200_000
+
+
+def _depth(rounds: int | None, max_rounds: int) -> int:
+    """The number of rounds ``_iterate`` may run; below 1 raises."""
+    depth = max_rounds if rounds is None else rounds
+    if depth < 1:
+        raise ValueError(
+            f"an iterative graph operator runs at least one round; got "
+            f"rounds={rounds}, max_rounds={max_rounds}"
+        )
+    return depth
 
 
 def _iterate(
@@ -47,21 +66,18 @@ def _iterate(
     matters). ``probe = (name, *aggregates)`` is the O(1)-scalar fixpoint
     check: single-row aggregates, attached with ``observe`` so they ride
     the checkpoint's eager job — each round is ONE Spark job, not
-    checkpoint + a separate collect, and no self-join diff. Job-launch
-    overhead is the whole cost on small duplicate graphs (same-session
-    min-of-4 A/B of ``connected_components`` on the 188-pair sf0.1 graph:
-    0.57 s -> 0.43 s, identical labels), and the saving is per round. The
+    checkpoint + a separate collect, and no self-join diff. Job launches
+    are most of a round's cost on small graphs, and the saving is per
+    round: a same-session min-of-4 A/B of ``connected_components`` on the
+    188-pair sf0.1 graph read 0.57 s -> 0.43 s, identical labels. That
+    graph no longer reaches this loop: graphs that small finish on the
+    driver (``_small_components``). The
     loop ends once ``stop(previous, current)`` holds for the probe's
     metrics — by default, when they did not change — or after
     ``max_rounds`` rounds, where hitting the cap means "take the current
     assignment".
     """
-    depth = max_rounds if rounds is None else rounds
-    if depth < 1:
-        raise ValueError(
-            f"an iterative graph operator runs at least one round; got "
-            f"rounds={rounds}, max_rounds={max_rounds}"
-        )
+    depth = _depth(rounds, max_rounds)
     name, *metrics = probe
     last = None
     for done in range(1, depth + 1):
@@ -87,6 +103,92 @@ def _xor_hash(*cols: str) -> Column:
     return F.expr(f"bit_xor(xxhash64({', '.join(cols)}))").alias("h")
 
 
+def _small_components(
+    edges: DataFrame, src: str, dst: str, null_from_neighbors: bool
+) -> tuple[DataFrame | None, DataFrame]:
+    """Materialize ``edges`` once as (a, b) and, when the list is small,
+    finish connected components on the driver.
+
+    Both endpoints are cast to their union type, the type either operator's
+    (node, label) columns have. The row count rides the materializing job
+    through ``observe``. At most ``DRIVER_MAX_EDGES`` rows: one more job
+    collects the blocks, union-find with min-id roots labels every node,
+    and the labels return as a frame built from an Arrow table, a
+    ``LocalTableScan`` that no Python worker decodes at run time (built
+    from a list of Rows it cost ~90 ms per execution; a pandas frame
+    would take that route when empty). Returns ``(labels,
+    edges)`` then, and ``(None, edges)`` above the bound, for the
+    distributed path to build on without recomputing the upstream plan.
+
+    A null endpoint joins no component, as in the distributed paths'
+    equi-joins. Its own label is the smallest label among its non-null
+    neighbours when ``null_from_neighbors`` (min-label propagation folds
+    every neighbour's label into a node, the null one included), else null
+    (large-star/small-star drops edges with a null end).
+
+    Sizing ``DRIVER_MAX_EDGES``, measured with ``connected_components``
+    at local[4] on random graphs with half as many nodes as edges (min of
+    2 runs, count and label sum identical on both paths):
+
+    ==========  ===========  ===============  ===========
+    edges       driver path  driver peak RSS  rounds
+    ==========  ===========  ===============  ===========
+    10,000      0.26 s       +4 MB            1.95 s
+    100,000     0.73 s       +36 MB           4.48 s
+    300,000     2.05 s       +74 MB           10.24 s
+    1,000,000   6.28 s       +282 MB          not run
+    ==========  ===========  ===============  ===========
+
+    The driver path costs ~6.3 µs an edge on one core; the rounds cost
+    ~1.4 s however small the graph, plus ~116 µs of core time an edge.
+    With any number of cores and perfect scaling the rounds still cost
+    the 1.4 s, which the driver path spends at ~220k edges, so below
+    that crossover no cluster beats the driver. The bound sits just
+    under it, where the driver holds ~60 MB of Python objects: well
+    inside any driver's memory, and its collect far under
+    ``spark.driver.maxResultSize``'s 1 GB default.
+    """
+    raw = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    node = raw.select("a").union(raw.select("b")).schema[0]
+    e = raw.select(
+        F.col("a").cast(node.dataType).alias("a"),
+        F.col("b").cast(node.dataType).alias("b"),
+    )
+    obs = Observation("cc_edges")
+    e = e.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
+    if obs.get["n"] > DRIVER_MAX_EDGES:
+        return None, e
+
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    null_nbrs = []
+    for a, b in e.collect():
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        if a is None or b is None:
+            null_nbrs.append(b if a is None else a)
+            continue
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    labels = {x: find(x) for x in parent}
+    if None in labels:
+        nbr_labels = [labels[x] for x in null_nbrs if x is not None]
+        if null_from_neighbors and nbr_labels:
+            labels[None] = min(nbr_labels)
+    schema = StructType(
+        [StructField("node", node.dataType), StructField("label", node.dataType)]
+    )
+    table = pa.table({"node": list(labels), "label": list(labels.values())})
+    return e.sparkSession.createDataFrame(table, schema), e
+
+
 def connected_components(
     edges: DataFrame, src: str = "src", dst: str = "dst", max_iter: int = 30
 ) -> DataFrame:
@@ -94,28 +196,33 @@ def connected_components(
     converges to the minimum node id in its component. Returns
     (node, label) for every node that appears in an edge.
 
-    Each iteration is one shuffle (join labels to the symmetric edge list,
-    fold with min); iterations needed = graph diameter. Duplicate clusters
+    A graph of at most ``DRIVER_MAX_EDGES`` edges finishes on the driver
+    (``_small_components``): one job materializes the edge list with its
+    count, one collects it. Near-dup graphs are that small (188 pairs at
+    sf0.1). A larger graph runs the rounds below on the edge list that
+    call materialized.
+
+    Each round is one shuffle (join labels to the symmetric edge list,
+    fold with min); rounds needed = graph diameter. Duplicate clusters
     have tiny diameters (near-dup graphs are dense blobs, not paths), so
     this converges in a handful of rounds; for adversarial long-path
     graphs, the large-star/small-star contraction
     (``connected_components_star``) drops the round count to ~log n.
 
-    Runs in ``_iterate``'s converged mode, capped at ``max_iter`` rounds.
-    The probe is the label SUM, which strictly decreases until fixpoint
-    (labels only ever move down), so "sum unchanged" means "labels
-    unchanged".
+    The rounds run in ``_iterate``'s converged mode, capped at
+    ``max_iter``, one job each with the probe riding it. The probe is the
+    label SUM, which strictly decreases until fixpoint (labels only ever
+    move down), so "sum unchanged" means "labels unchanged".
     """
-    # Materialize the symmetric edge list ONCE. ``edges`` is typically the
-    # output of a whole near-dup pipeline (LSH banding + verification);
-    # without this checkpoint every propagation round would recompute that
-    # entire upstream plan — measured ~1.5s/round on the full-dedup bench
-    # entry. The edge set is pairs-only (two longs a row), far smaller than
-    # the corpus, so materializing it is the cheap side of the trade at any
-    # scale.
+    _depth(None, max_iter)
+    labels, e = _small_components(edges, src, dst, null_from_neighbors=True)
+    if labels is not None:
+        return labels
+    # The symmetric edge list is referenced by every round, so it is cut
+    # once too; without the cut each round would redo its distinct.
     sym = (
-        edges.select(F.col(src).alias("node"), F.col(dst).alias("nbr"))
-        .union(edges.select(F.col(dst).alias("node"), F.col(src).alias("nbr")))
+        e.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
+        .union(e.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
         .distinct()
         .localCheckpoint()
     )
@@ -154,7 +261,9 @@ def connected_components_star(
     2-3), so min-label is the right default there; this operator is for
     adversarial long-path / high-diameter graphs (linkage chains, road
     networks, time-adjacency graphs), where diameter-many shuffles is
-    the difference between 3 rounds and 3000.
+    the difference between 3 rounds and 3000. Below
+    ``DRIVER_MAX_EDGES`` edges neither runs a round: both finish on the
+    driver (``_small_components``).
 
     One round = large-star (every node's strictly-larger neighbors
     attach to its minimum neighborhood member) then small-star (every
@@ -170,16 +279,20 @@ def connected_components_star(
     contract as ``connected_components``; equality on random graphs and
     a 200-node path is pinned in tests.
     """
+    _depth(None, max_rounds)
+    labels, raw = _small_components(edges, src, dst, null_from_neighbors=False)
+    if labels is not None:
+        return labels
     # nodes come off the RAW edge list so a node appearing only in a
     # self-loop edge still gets its (x, x) row — the same contract as
     # ``connected_components``, which unions both endpoints before any
-    # filtering. The contraction rounds below then drop self-loops.
-    raw = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    # filtering. The contraction rounds below then drop self-loops. Both
+    # read the materialized edge list: ``nodes`` only in the final join,
+    # the canonical pairs only in round 1, so neither needs a cut of its own.
     nodes = (
         raw.select(F.col("a").alias("node"))
         .union(raw.select(F.col("b").alias("node")))
         .distinct()
-        .localCheckpoint()
     )
 
     def step(e: DataFrame) -> DataFrame:
@@ -212,7 +325,7 @@ def connected_components_star(
         return rewired.union(mn2.select(F.col("a"), F.col("m").alias("b"))).distinct()
 
     # canonical undirected pairs (a > b not required yet; just a != b)
-    e = raw.filter(F.col("a") != F.col("b")).distinct().localCheckpoint()
+    e = raw.filter(F.col("a") != F.col("b")).distinct()
     probe = ("cc_star_edge_hash", _xor_hash("a", "b"), F.count(F.lit(1)).alias("n"))
     e = _iterate(step, e, None, max_rounds, probe)
     # e is now the star forest: (node, component-min) for non-roots.

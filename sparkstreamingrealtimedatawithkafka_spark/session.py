@@ -103,7 +103,6 @@ from pyspark import SparkContext
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
-from sparkstreamingrealtimedatawithkafka_spark import worker_daemon
 
 CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
 FS_CHECKPOINT_MANAGER = (
@@ -175,6 +174,11 @@ def build_session(
     shuffle_partitions: int | None = None,
     extra: dict[str, str] | None = None,
 ) -> SparkSession:
+    # Imported here, not at module level: the daemon runs as ``python -m``,
+    # and runpy warns and executes a module twice when importing its
+    # package has already imported it.
+    from sparkstreamingrealtimedatawithkafka_spark import worker_daemon
+
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     builder = (

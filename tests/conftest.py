@@ -67,3 +67,26 @@ def job_count(spark):
         yield count
     finally:
         sc._jsc.clearJobGroup()
+
+
+def cc_on_both_paths(op, edges, **kw) -> set[tuple]:
+    """``op``'s (node, label) rows, run once with small graphs finishing on
+    the driver and once with that finish off (``DRIVER_MAX_EDGES`` 0), so
+    that every graph takes the distributed rounds. Asserts that both runs
+    return the same schema and rows, the first as a local table, and returns
+    the rows."""
+    from sparkstreamingrealtimedatawithkafka_spark.operators import graph
+
+    got = {}
+    for path in ("driver", "distributed"):
+        with pytest.MonkeyPatch.context() as mp:
+            if path == "distributed":
+                mp.setattr(graph, "DRIVER_MAX_EDGES", 0)
+            df = op(edges, **kw)
+            rows = {tuple(r) for r in df.collect()}
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            # Spark plans an empty result as an empty local table either way.
+            assert plan.startswith("LocalTableScan") == (path == "driver" or not rows), plan
+            got[path] = df.schema, rows
+    assert got["driver"] == got["distributed"], op.__name__
+    return got["driver"][1]

@@ -16,6 +16,8 @@ from sparkstreamingrealtimedatawithkafka_spark.operators.graph import (
     pagerank_int,
 )
 
+from conftest import cc_on_both_paths
+
 SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -192,7 +194,8 @@ def test_pagerank_converged_mode_terminates_on_fixture_graph(spark):
 def test_cc_star_equals_min_label_on_random_graphs(spark):
     """Large-star/small-star must produce exactly min-label CC's
     (node, label) assignment — seeded random graphs with several
-    components and dangling chains."""
+    components and dangling chains — on the driver path and on the
+    distributed rounds."""
     import random
 
     rng = random.Random(7)
@@ -209,14 +212,8 @@ def test_cc_star_equals_min_label_on_random_graphs(spark):
                 pairs.add((a, b))
         pairs = {(a, b) for a, b in pairs if a != b}
         edges = spark.createDataFrame(sorted(pairs), ["src", "dst"])
-        star = {
-            (r["node"], r["label"])
-            for r in connected_components_star(edges).collect()
-        }
-        minlbl = {
-            (r["node"], r["label"])
-            for r in connected_components(edges).collect()
-        }
+        star = cc_on_both_paths(connected_components_star, edges)
+        minlbl = cc_on_both_paths(connected_components, edges)
         assert star == minlbl and star, f"trial {trial} diverged"
 
 
@@ -228,30 +225,21 @@ def test_cc_star_handles_high_diameter_path(spark):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(1, n)], ["src", "dst"]
     )
-    labels = connected_components_star(edges)
-    got = {(r["node"], r["label"]) for r in labels.collect()}
+    got = cc_on_both_paths(connected_components_star, edges)
     assert got == {(i, 1) for i in range(1, n + 1)}
 
 
 def test_cc_star_keeps_self_loop_only_nodes(spark):
     """A node that appears ONLY in a self-loop edge must still get its
-    (x, x) row from BOTH engine paths — the shared (node, label)
-    contract (r7 advisory: star built nodes after the a != b filter and
-    silently dropped them)."""
+    (x, x) row from BOTH operators, each on the driver path and on the
+    distributed rounds — the shared (node, label) contract (r7 advisory:
+    star built nodes after the a != b filter and silently dropped them)."""
     edges = spark.createDataFrame(
         [(1, 2), (7, 7), (9, 9), (2, 1)], ["src", "dst"]
     )
     want = {(1, 1), (2, 1), (7, 7), (9, 9)}
-    star = {
-        (r["node"], r["label"])
-        for r in connected_components_star(edges).collect()
-    }
-    minlbl = {
-        (r["node"], r["label"])
-        for r in connected_components(edges).collect()
-    }
-    assert star == want
-    assert minlbl == want
+    assert cc_on_both_paths(connected_components_star, edges) == want
+    assert cc_on_both_paths(connected_components, edges) == want
 
 
 def test_pagerank_rejects_tol_with_fixed_iterations(spark):

@@ -13,6 +13,10 @@ Counts are ``(eager, total)``: the jobs launched inside the call, then
 those plus one ``collect`` of the result. With adaptive execution each
 shuffle stage is a job of its own, so a count is stages plus actions.
 
+The connected-components operators finish graphs this small on the driver;
+the ``_distributed`` rows run them again with that finish off
+(``DRIVER_MAX_EDGES`` 0), so the counts of their rounds stay pinned too.
+
 Every operator runs at least one round: a depth or cap below 1 raises.
 """
 
@@ -21,6 +25,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from sparkstreamingrealtimedatawithkafka_spark.operators import graph
 from sparkstreamingrealtimedatawithkafka_spark.operators.graph import (
     connected_components,
     connected_components_star,
@@ -58,8 +63,10 @@ def _jobs(spark, run):
 
 
 OPERATOR_RUNS = {
-    "cc": (PAIRS, lambda e: connected_components(e), (24, 25)),
-    "cc_star": (PAIRS, lambda e: connected_components_star(e), (28, 32)),
+    "cc": (PAIRS, lambda e: connected_components(e), (2, 2)),
+    "cc_star": (PAIRS, lambda e: connected_components_star(e), (2, 2)),
+    "cc_distributed": (PAIRS, lambda e: connected_components(e), (25, 26)),
+    "cc_star_distributed": (PAIRS, lambda e: connected_components_star(e), (27, 31)),
     "lpa_rounds4": (PAIRS, lambda e: label_propagation(e, rounds=4), (0, 13)),
     "lpa_converged": (PAIRS, lambda e: label_propagation(e, rounds=None), (177, 178)),
     "pagerank_iter5": (PAIRS, lambda e: pagerank_int(e, iterations=5), (13, 18)),
@@ -82,8 +89,14 @@ OPERATOR_RUNS = {
 }
 
 
+def _distributed(monkeypatch, name: str) -> None:
+    if name.endswith("_distributed"):
+        monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", 0)
+
+
 @pytest.mark.parametrize("name", list(OPERATOR_RUNS))
-def test_operator_job_counts(spark, name):
+def test_operator_job_counts(spark, monkeypatch, name):
+    _distributed(monkeypatch, name)
     pairs, run, want = OPERATOR_RUNS[name]
     e = _sym(spark, pairs)
     assert _jobs(spark, lambda: run(e)) == want
@@ -92,18 +105,22 @@ def test_operator_job_counts(spark, name):
 # The catalog entries that run the graph operators, and their counts at
 # sf0.001 after conftest's warm-up.
 ENTRY_JOBS = {
-    "dedup_cc_clusters": (20, 21),
-    "dedup_cc_clusters_star": (30, 34),
+    "dedup_cc_clusters": (3, 3),
+    "dedup_cc_clusters_star": (3, 3),
     "graph_community_lpa": (6, 18),
     "graph_kcore": (18, 27),
     "graph_pagerank_copurchase": (16, 19),
-    "pipeline_full_dedup": (21, 25),
+    "pipeline_full_dedup": (14, 16),
+    "dedup_cc_clusters_distributed": (21, 22),
+    "dedup_cc_clusters_star_distributed": (27, 31),
+    "pipeline_full_dedup_distributed": (22, 26),
 }
 
 
 @pytest.mark.parametrize("key", list(ENTRY_JOBS))
-def test_entry_job_counts(spark, warm, key):
-    fn = REGISTRY[key].fn
+def test_entry_job_counts(spark, warm, monkeypatch, key):
+    _distributed(monkeypatch, key)
+    fn = REGISTRY[key.removesuffix("_distributed")].fn
     assert _jobs(spark, lambda: fn(spark, SF_DIR)) == ENTRY_JOBS[key]
 
 
@@ -125,3 +142,14 @@ def test_zero_rounds_rejected(spark, name):
     # pagerank_int(iterations=0) failed on None.select.
     with pytest.raises(ValueError, match="at least one round"):
         ZERO_ROUNDS[name](_sym(spark, PAIRS))
+
+
+@pytest.mark.parametrize("name", ["cc", "cc_star"])
+def test_cc_rejects_zero_rounds_before_any_job(spark, name):
+    """The connected-components operators materialize their input first,
+    so the round check has to come before that job."""
+    e = _sym(spark, PAIRS)
+    with job_count(spark) as jobs:
+        with pytest.raises(ValueError, match="at least one round"):
+            ZERO_ROUNDS[name](e)
+        assert jobs() == 0

@@ -191,8 +191,66 @@ def test_scale_check_synthetic_row_builds_no_10x_dir(spark, monkeypatch, capsys)
     monkeypatch.setattr(scale_check, "SF_DIR", SF_DIR)
     monkeypatch.setattr(scale_check, "min_time", lambda spark, build: 1.0)
     monkeypatch.setattr(scale_check, "ccstar_path", lambda spark, n: None)
+    monkeypatch.setattr(scale_check, "noop", lambda df: None)
     monkeypatch.setattr(sys, "argv", ["scale_check.py", scale_check.SYNTHETIC])
     scale_check.main()
     summary = json.loads(capsys.readouterr().out.splitlines()[-1])
     assert list(summary["rows"]) == [scale_check.SYNTHETIC]
     assert "rows_10x" not in summary
+
+
+def test_scale_check_warms_star_code_before_timing(spark, monkeypatch, capsys):
+    """The ``ccstar_path`` row times its 1x side first, so a small path runs
+    the star contraction, untimed, before any timing starts."""
+    from tools import scale_check
+
+    events = []
+
+    def path(spark, n):
+        events.append(("build", n))
+        return n
+
+    def timed(spark, build):
+        events.append(("time", build()))
+        return 1.0
+
+    monkeypatch.setattr(scale_check, "build_session", lambda **kw: spark)
+    monkeypatch.setattr(scale_check, "SF_DIR", SF_DIR)
+    monkeypatch.setattr(scale_check, "ccstar_path", path)
+    monkeypatch.setattr(scale_check, "noop", lambda df: events.append(("run", df)))
+    monkeypatch.setattr(scale_check, "min_time", timed)
+    monkeypatch.setattr(sys, "argv", ["scale_check.py", scale_check.SYNTHETIC])
+    scale_check.main()
+    capsys.readouterr()
+    warm = scale_check.WARM_PATH_NODES
+    assert events[1:] == [
+        ("build", warm),
+        ("run", warm),
+        ("build", scale_check.PATH_NODES),
+        ("time", scale_check.PATH_NODES),
+        ("build", scale_check.PATH_NODES * scale_check.FACTOR),
+        ("time", scale_check.PATH_NODES * scale_check.FACTOR),
+    ]
+
+
+def test_scale_check_path_runs_distributed_star(spark, monkeypatch):
+    """Both sizes of ``ccstar_path`` time the distributed contraction, though
+    the 1x path is small enough to finish on the driver; the driver finish
+    is on again afterwards."""
+    from sparkstreamingrealtimedatawithkafka_spark.operators import graph
+    from tools import scale_check
+
+    assert scale_check.PATH_NODES - 1 <= graph.DRIVER_MAX_EDGES
+    loops = []
+    iterate = graph._iterate
+
+    def counted(*args, **kw):
+        loops.append(args)
+        return iterate(*args, **kw)
+
+    monkeypatch.setattr(graph, "_iterate", counted)
+    bound = graph.DRIVER_MAX_EDGES
+    row = scale_check.ccstar_path(spark, 50).collect()[0]
+    assert (row.n, row.s) == (50, 50)
+    assert loops, "the star path finished on the driver"
+    assert graph.DRIVER_MAX_EDGES == bound

@@ -111,6 +111,27 @@ def test_session_runs_package_daemon(spark):
     assert spark.sparkContext.getConf().get(PYTHON_DAEMON_CONF, None) == PACKAGE_DAEMON
 
 
+def test_package_import_leaves_daemon_unimported():
+    """Workers start the daemon with ``python -m``; had importing the package
+    already imported it, runpy would warn and execute the module twice."""
+    name = worker_daemon.__name__
+    script = (
+        "import runpy, sys, warnings\n"
+        "import sparkstreamingrealtimedatawithkafka_spark.session\n"
+        f"assert {name!r} not in sys.modules, 'imported with the package'\n"
+        "warnings.simplefilter('error')\n"
+        f"runpy.run_module({name!r}, run_name='probe')\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=REPO,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+
+
 def test_extra_restores_stock_daemon():
     # The daemon module is read from the SparkContext's conf, so build one.
     script = (
